@@ -357,7 +357,7 @@ final class MetaStore(dir: String) extends JobQueue with LeaseStore with AutoClo
       ps.executeUpdate()
       val rs = ps.getGeneratedKeys
       rs.next(); rs.getLong(1)
-    } finally ps.close()
+    } finally { ps.close(); notifyAll() }
   }
 
   /** One optimistic claim attempt; None when no pending row won. */
@@ -377,12 +377,19 @@ final class MetaStore(dir: String) extends JobQueue with LeaseStore with AutoClo
     }
   }
 
-  override def dequeue(timeoutMs: Long): Option[(Long, JobMessage)] = {
-    val deadline = System.currentTimeMillis() + timeoutMs
+  /** Claim the next pending job, waiting up to `timeoutMs`. The wait is
+    * on this store's monitor, which [[enqueue]] and [[nack]] signal: a
+    * new job wakes an idle worker at once, and an idle worker queries
+    * Derby once per timeout. A job that another process enqueued into
+    * the same store is seen at the timeout. */
+  override def dequeue(timeoutMs: Long): Option[(Long, JobMessage)] = synchronized {
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
     var claimed = tryClaim()
-    while (claimed.isEmpty && System.currentTimeMillis() < deadline) {
-      Thread.sleep(20)
+    var leftMs = timeoutMs
+    while (claimed.isEmpty && leftMs > 0) {
+      wait(leftMs)
       claimed = tryClaim()
+      leftMs = (deadline - System.nanoTime()) / 1000000L
     }
     claimed
   }
@@ -395,7 +402,7 @@ final class MetaStore(dir: String) extends JobQueue with LeaseStore with AutoClo
   override def nack(id: Long): Unit = synchronized {
     val ps = conn.prepareStatement(
       "UPDATE queue SET status='pending' WHERE id=? AND status='claimed'")
-    try { ps.setLong(1, id); ps.executeUpdate() } finally ps.close()
+    try { ps.setLong(1, id); ps.executeUpdate() } finally { ps.close(); notifyAll() }
   }
 
   override def isEmpty: Boolean = size == 0

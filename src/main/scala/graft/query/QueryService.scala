@@ -1,8 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import java.io.Writer
 import java.nio.file.Paths
@@ -11,8 +13,12 @@ import java.nio.file.Paths
   * A14). The reference trims the SQL (whitespace + trailing ';',
   * /root/reference/pkg/util/sql.go:9-13), hands it verbatim to the
   * backend, and streams the encoded result without ever materializing
-  * it. Spark analog: `spark.sql` → `toLocalIterator` (one partition at
-  * a time on the driver, executors stream) → incremental encoder.
+  * it. Spark analog: `spark.sql` → rows encoded to strings on the
+  * executors → one Spark job per wave of result partitions, written to
+  * the client in partition order. At most one wave is buffered on the
+  * driver, and a wave is sized to a budget under
+  * `spark.driver.maxResultSize` (see `streamLines`); `toLocalIterator`
+  * would buffer one partition but run one job per partition.
   */
 object QueryService {
 
@@ -110,41 +116,102 @@ object QueryService {
   def writeJson(df: DataFrame, out: Writer): Unit = {
     out.write("[")
     var first = true
-    val it = df.toJSON.toLocalIterator()
-    while (it.hasNext) {
+    streamLines(df.toJSON, waveBudget(df.sparkSession)) { line =>
       if (!first) out.write(",")
-      out.write(it.next())
+      out.write(line)
       first = false
     }
     out.write("]")
   }
 
   /** One JSON object per line (FORMAT JSONEachRow analog). */
-  def writeNdjson(df: DataFrame, out: Writer): Unit = {
-    val it = df.toJSON.toLocalIterator()
-    while (it.hasNext) { out.write(it.next()); out.write("\n") }
-  }
+  def writeNdjson(df: DataFrame, out: Writer): Unit =
+    streamLines(df.toJSON, waveBudget(df.sparkSession)) { line =>
+      out.write(line); out.write("\n")
+    }
 
   /** CSV with header row; NULL renders as the literal `null`
     * (postgres/query.go:139-197 writes %v-stringified values and
     * `null` at :176). Quotes only when the value needs escaping. */
   def writeCsv(df: DataFrame, out: Writer): Unit = {
-    val cols = df.columns
-    out.write(cols.map(csvCell).mkString(","))
+    out.write(df.columns.map(csvCell).mkString(","))
     out.write("\n")
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      val row: Row = it.next()
-      var i = 0
-      val sb = new StringBuilder
-      while (i < cols.length) {
-        if (i > 0) sb.append(',')
-        sb.append(csvCell(stringify(row.get(i))))
-        i += 1
-      }
-      out.write(sb.toString)
-      out.write("\n")
+    streamLines(df.map(csvLine)(Encoders.STRING), waveBudget(df.sparkSession)) { line =>
+      out.write(line); out.write("\n")
     }
+  }
+
+  /** Hands each string of `lines` to `emit` in partition order, one
+    * Spark job per wave of partitions. A wave's strings must fit
+    * `budget` chars on the driver: each task returns its partition only
+    * while the partition stays under its share of the budget, and a
+    * partition that passes its share is fetched again in a job of its
+    * own, as `toLocalIterator` would fetch it. Each next wave is sized
+    * from the largest partition seen so far, so a small result takes one
+    * job per `defaultParallelism` partitions and a large export drops
+    * back to one partition per job. */
+  private[graft] def streamLines(lines: Dataset[String], budget: Long)(emit: String => Unit): Unit = {
+    val qe = lines.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("streamLines")) {
+      val rdd = qe.toRdd
+      val sc = rdd.sparkContext
+      def fetch(ids: Seq[Int], cap: Long): Array[Option[Array[String]]] =
+        sc.runJob(rdd, (it: Iterator[InternalRow]) => linesUpTo(it, cap), ids)
+      val most = math.max(1, sc.defaultParallelism)
+      val n = rdd.getNumPartitions
+      var wave = most
+      var largest = 0L
+      var start = 0
+      while (start < n) {
+        val ids = start until math.min(n, start + wave)
+        val parts = fetch(ids, if (ids.size == 1) Long.MaxValue else budget / ids.size)
+        var i = 0
+        while (i < parts.length) {
+          val part = parts(i).getOrElse(fetch(Seq(ids(i)), Long.MaxValue).head.get)
+          parts(i) = None
+          part.foreach(emit)
+          largest = math.max(largest, part.iterator.map(_.length.toLong).sum)
+          i += 1
+        }
+        start = ids.end
+        wave = math.min(most.toLong, math.max(1L, budget / math.max(1L, largest))).toInt
+      }
+    }
+  }
+
+  /** Chars of encoded rows one wave may bring to the driver: a quarter
+    * of `spark.driver.maxResultSize` (room for serialization overhead
+    * and multi-byte chars, so a wave never trips the job-abort check),
+    * and at most an eighth of the driver heap. */
+  private def waveBudget(spark: SparkSession): Long = {
+    val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.driver.maxResultSize", "1g"))
+    val heap = Runtime.getRuntime.maxMemory / 8
+    if (maxResult <= 0) heap else math.min(maxResult / 4, heap)
+  }
+
+  /** A partition's strings, or None once their length passes `cap`. */
+  private def linesUpTo(it: Iterator[InternalRow], cap: Long): Option[Array[String]] = {
+    val out = Array.newBuilder[String]
+    var chars = 0L
+    while (it.hasNext) {
+      val line = it.next().getUTF8String(0).toString
+      chars += line.length
+      if (chars > cap) return None
+      out += line
+    }
+    Some(out.result())
+  }
+
+  private def csvLine(row: Row): String = {
+    val sb = new StringBuilder
+    var i = 0
+    while (i < row.length) {
+      if (i > 0) sb.append(',')
+      sb.append(csvCell(stringify(row.get(i))))
+      i += 1
+    }
+    sb.toString
   }
 
   private def stringify(v: Any): String = v match {

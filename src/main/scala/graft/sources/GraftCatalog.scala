@@ -4,7 +4,7 @@ import graft.functions.TypeLattice
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types._
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
 
 /** Parquet-backed table catalog with the reference's additive-only
   * schema evolution (SURVEY §2A A5): every table is a directory of
@@ -196,18 +196,22 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   }
 
 
-  /** Recursive .parquet listing (hive-partitioned layouts nest). */
-  private def parquetFiles(dir: HPath): Seq[HPath] = {
+  /** Recursive .parquet listing (hive-partitioned layouts nest), walked
+    * with `listStatus`. The located-status iterator builds a
+    * `LocatedFileStatus` per file, which copies its permissions — on a
+    * local FS without native Hadoop IO that forks one `stat` process per
+    * file (measured: 300 files 894 ms, against 7 ms for this walk). */
+  private def parquetStatuses(dir: HPath): Seq[FileStatus] = {
     val fs = fsOf(dir)
-    if (!fs.exists(dir)) return Nil
-    val out = Seq.newBuilder[HPath]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) out += st.getPath
+    def walk(d: HPath): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
+      if (st.isDirectory) walk(st.getPath)
+      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+      else Nil
     }
-    out.result()
+    if (fs.exists(dir)) walk(dir) else Nil
   }
+
+  private def parquetFiles(dir: HPath): Seq[HPath] = parquetStatuses(dir).map(_.getPath)
 
   /** `child`'s path relative to `base` ("" when equal) — Hadoop Path
     * has no relativize; both sides are qualified through the same FS
@@ -451,9 +455,14 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * under the lock and lands in whichever generation is current
     * after any concurrent rewrite commits. Cross-driver, serialize
     * rewrites against ingest through the control-plane queue (same
-    * rule as the reference's backends). */
+    * rule as the reference's backends).
+    *
+    * Returns the appended row count, summed from the published files'
+    * parquet footers (which the stats update reads anyway); only when
+    * that footer read fails is `df` counted, a second pass over the
+    * input. */
   def append(db: String, table: String, df: DataFrame,
-             jobKey: Option[String] = None): Unit = {
+             jobKey: Option[String] = None): Long = {
     val target = structOf(db, table)
     val present = df.columns.toSet
     val projected = df.select(target.fields.toIndexedSeq.map { f =>
@@ -472,9 +481,10 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     val parts = partitioningOf(db, table)
     (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
       .parquet(stage.toString)
-    lockFor(db, table).synchronized {
+    val footerRows = lockFor(db, table).synchronized {
       publishStage(stage, dataDir(db, table), db, table, key)
     }
+    footerRows.getOrElse(df.count())
   }
 
   /** Rename-publish a staged write into the data dir (see [[append]]):
@@ -484,9 +494,10 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * atomic: rename on HDFS/file://, copy+PUT on object stores), and
     * the batch COMMITS with one atomic marker write. Crash anywhere
     * before the marker → strict readers never saw the batch and the
-    * redelivered job republishes from scratch. */
+    * redelivered job republishes from scratch. Returns the batch's
+    * footer row count, None when the footers could not be read. */
   private def publishStage(stage: HPath, data: HPath, db: String,
-                           table: String, key: String): Unit = {
+                           table: String, key: String): Option[Long] = {
     val fs = fsOf(data)
     fs.mkdirs(data)
     val marker = new HPath(commitsDir(db, table), s"$key.json")
@@ -517,8 +528,9 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     // the marker set is always a complete ledger of post-rewrite
     // contributions — stats.json is DERIVED state the update below
     // (and any reader) can recompute from it.
-    val (bRows, bBytes) = try footerStats(published.map(new HPath(data, _)))
-    catch { case _: Exception => (0L, 0L) } // stats are advisory
+    val footers = try Some(footerStats(published.map(new HPath(data, _))))
+    catch { case _: Exception => None } // stats are advisory
+    val (bRows, bBytes) = footers.getOrElse((0L, 0L))
     writeString(marker,
       published.map(quote).mkString("""{"files":[""", ",", """],""") +
         s""""rows":$bRows,"bytes":$bBytes}""")
@@ -530,6 +542,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     catch { case _: Exception => () } // stats are advisory
     // best-effort staging cleanup (stray _SUCCESS/_temporary markers)
     try fs.delete(stage, true) catch { case _: Exception => () }
+    footers.map(_._1)
   }
 
   private def hasData(db: String, table: String): Boolean =
@@ -747,6 +760,9 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     keys
   }
 
+  private def strictCommits: Boolean =
+    spark.conf.getOption("graft.warehouse.strictCommits").exists(_.equalsIgnoreCase("true"))
+
   /** Read the table under its full sidecar schema (partition columns
     * resolve from the directory layout by name).
     *
@@ -758,8 +774,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   def read(db: String, table: String): DataFrame = {
     val struct = structOf(db, table)
     val data = dataDir(db, table)
-    val strict = spark.conf.getOption("graft.warehouse.strictCommits")
-      .exists(_.equalsIgnoreCase("true"))
+    val strict = strictCommits
     var strictKeys: Option[Set[String]] = None
     val files =
       if (!strict) if (hasData(db, table)) Seq(data.toString) else Nil
@@ -822,10 +837,10 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       val tdir = tableDir(db, table)
       val fs = fsOf(tdir)
       val cur = dataDir(db, table)
-      val parts = parquetFiles(cur)
+      val parts = parquetStatuses(cur)
       if (parts.isEmpty) return (0, 0)
       if (parts.length <= 1 && clusterCols.isEmpty) return (parts.length, parts.length)
-      val totalBytes = parts.map(p => fs.getFileStatus(p).getLen).sum
+      val totalBytes = parts.map(_.getLen).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
       val nextName = s"data-${genNumber(cur.getName) + 1}"
       val next = new HPath(tdir, nextName)
@@ -916,10 +931,8 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
           s"table $db.$table has a dedup policy on '${p.textCol}' but the " +
             "batch lacks that column; appending WITHOUT dedup")
         append(db, table, df, jobKey)
-        df.count()
       case None =>
         append(db, table, df, jobKey)
-        df.count()
     }
 
   /** Batches appended to a policy-bearing table WITHOUT the probe
@@ -1042,14 +1055,11 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     // tag the retry as a dup of an index entry whose table row never
     // landed, silently losing the document.
     val appended =
-      if (policy.mode == "drop") {
-        append(db, table, survivors.drop("__is_dup", "__dup_of"))
-        survivors.count()
-      } else {
+      if (policy.mode == "drop") append(db, table, survivors.drop("__is_dup", "__dup_of"))
+      else {
         addColumns(db, table, Map(
           "__is_dup" -> TypeLattice.Bool, "__dup_of" -> TypeLattice.Int))
         append(db, table, tagged)
-        tagged.count()
       }
     val survivorIndex = graft.operators.Dedup.buildMinhashIndex(
       survivors, idCol, policy.textCol,
@@ -1152,14 +1162,11 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     // second — a retry re-probes an index that missed the batch and
     // converges on at-least-once
     val appended =
-      if (policy.mode == "drop") {
-        append(db, table, survivors.drop("__is_dup", "__dup_of"))
-        survivors.count()
-      } else {
+      if (policy.mode == "drop") append(db, table, survivors.drop("__is_dup", "__dup_of"))
+      else {
         addColumns(db, table, Map(
           "__is_dup" -> TypeLattice.Bool, "__dup_of" -> TypeLattice.Int))
         append(db, table, tagged)
-        tagged.count()
       }
     val survivorVecs = assigned
       .join(survivors.select(col(idCol)), Seq(idCol))
@@ -1191,22 +1198,13 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       val dir = new HPath(dedupIndexDir(db, table), part)
       val fs = fsOf(dir)
       if (fs.exists(dir)) {
-        def parts(p: HPath): Int = {
-          var n = 0
-          val it = fs.listFiles(p, false)
-          while (it.hasNext) { if (it.next().getPath.getName.endsWith(".parquet")) n += 1 }
-          n
-        }
-        val nIn = parts(dir)
-        before += nIn
-        if (nIn <= 1) after += nIn
+        def parts(p: HPath): Seq[FileStatus] = fs.listStatus(p).toSeq
+          .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        val in = parts(dir)
+        before += in.length
+        if (in.length <= 1) after += in.length
         else {
-          val bytes = {
-            var s = 0L
-            val it = fs.listFiles(dir, false)
-            while (it.hasNext) { val st = it.next(); if (st.getPath.getName.endsWith(".parquet")) s += st.getLen }
-            s
-          }
+          val bytes = in.map(_.getLen).sum
           val nOut = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
           val tmp = new HPath(dedupIndexDir(db, table), s"$part.compacting")
           val old = new HPath(dedupIndexDir(db, table), s"$part.old")
@@ -1216,16 +1214,46 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
           fs.rename(dir, old)
           fs.rename(tmp, dir)
           fs.delete(old, true)
-          after += parts(dir)
+          after += parts(dir).length
         }
       }
     }
     (before, after)
   }
 
-  /** Register all tables of a db as temp views for SQL passthrough. */
-  def registerViews(db: String): Unit =
-    listTables(db).foreach(t => read(db, t).createOrReplaceTempView(t))
+  private def viewStamp(db: String, table: String): GraftCatalog.ViewStamp = {
+    def text(p: HPath) = if (exists(p)) Some(readString(p)) else None
+    GraftCatalog.ViewStamp(db,
+      Seq(schemaFile _, genFile _, partitionFile _, statsFile _).map(f => text(f(db, table))),
+      strictCommits, committedKeys(db, table),
+      parquetStatuses(dataDir(db, table)).map(st =>
+        (st.getPath.toString, st.getLen, st.getModificationTime)))
+  }
+
+  /** View name → (stamp it was built under, the session's view object
+    * registered then). Guarded by its own monitor. */
+  private val registered =
+    scala.collection.mutable.HashMap.empty[String, (GraftCatalog.ViewStamp, AnyRef)]
+
+  /** Register all tables of a db as temp views for SQL passthrough.
+    * A table's view is rebuilt only when its [[GraftCatalog.ViewStamp]]
+    * changed, or when the session's view is no longer the one
+    * registered here (an admin's `CREATE OR REPLACE TEMP VIEW`, a `DROP
+    * VIEW`, another catalog on the same session). The stamp is taken
+    * BEFORE the read, so a change racing the read only costs one more
+    * rebuild. */
+  def registerViews(db: String): Unit = registered.synchronized {
+    val views = spark.sessionState.catalog
+    listTables(db).foreach { t =>
+      val stamp = viewStamp(db, t)
+      val current = registered.get(t).exists { case (s, view) =>
+        s == stamp && views.getRawTempView(t).exists(_ eq view) }
+      if (!current) {
+        read(db, t).createOrReplaceTempView(t)
+        views.getRawTempView(t).foreach(v => registered(t) = (stamp, v))
+      }
+    }
+  }
 
   def columns(db: String, table: String): Seq[(String, String)] = readSchemaSeq(db, table)
 
@@ -1261,6 +1289,17 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
 }
 
 object GraftCatalog {
+  /** Everything [[GraftCatalog.read]] of one table depends on: its
+    * sidecars (schema, generation pointer, partitioning, stats), the
+    * strict-commits setting, the committed keys and the current
+    * generation's file listing. Published files are never rewritten in
+    * place (a retry republishes under a fresh mtime), so (path, length,
+    * mtime) pins the listing. Equal stamps mean a fresh `read` would
+    * build the same DataFrame. */
+  private final case class ViewStamp(db: String, sidecars: Seq[Option[String]],
+                                     strict: Boolean, committed: Set[String],
+                                     files: Seq[(String, Long, Long)])
+
   /** The signature CONVENTION of a minhash dedup index — everything
     * that decides whether two sketches are comparable. Persisted in
     * the policy sidecar AND next to the index it built; a probe whose

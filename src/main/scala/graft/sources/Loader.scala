@@ -103,6 +103,5 @@ final class Loader(catalog: GraftCatalog,
     val df = inferred.withColumn(catalog.RowIdColumn,
       graft.functions.NativeExpressions.snowflake_id())
     catalog.append(database, table, df)
-    df.count()
   }
 }

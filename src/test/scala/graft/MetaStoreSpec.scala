@@ -41,6 +41,35 @@ class MetaStoreSpec extends AnyFunSuite {
     m2.close()
   }
 
+  test("queue: enqueue and nack wake a waiting dequeue well before its timeout") {
+    val m = new MetaStore(newDir())
+    val job = JobMessage.InsertFile("db1", "t1", "/tmp/f1.ndjson")
+    def waitingDequeue() = {
+      val result = new java.util.concurrent.CompletableFuture[(Option[(Long, JobMessage)], Long)]
+      new Thread(() => {
+        val claimed = m.dequeue(30000)
+        result.complete((claimed, System.nanoTime()))
+      }).start()
+      Thread.sleep(300) // let the consumer reach its wait
+      result
+    }
+    val first = waitingDequeue()
+    val enqueuedAt = System.nanoTime()
+    val id = m.enqueue(job)
+    val (claimed, wokeAt) = first.get(10, java.util.concurrent.TimeUnit.SECONDS)
+    assert(claimed.contains((id, job)))
+    assert((wokeAt - enqueuedAt) / 1000000L < 5000, "enqueue must wake the waiting dequeue")
+
+    val second = waitingDequeue()
+    val nackedAt = System.nanoTime()
+    m.nack(id)
+    val (again, wokeAgainAt) = second.get(10, java.util.concurrent.TimeUnit.SECONDS)
+    assert(again.contains((id, job)))
+    assert((wokeAgainAt - nackedAt) / 1000000L < 5000, "nack must wake the waiting dequeue")
+    m.ack(id)
+    m.close()
+  }
+
   test("leases: exclusive while live, TTL takeover, monotone fencing") {
     val m = new MetaStore(newDir())
     val t0 = 1000000L

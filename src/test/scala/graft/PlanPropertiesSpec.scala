@@ -331,14 +331,30 @@ class PlanPropertiesSpec extends SparkTestBase {
     assert(jlJoin >= 0 && jlAgg > jlJoin,
       s"q_join_left must aggregate orders below the join:\n${jl.take(3000)}")
 
-    // q_big_orders: the selective HAVING semi-filters sit BELOW the
-    // customer/lineitem inner joins — a semi join above the full
-    // 3-way join would shuffle everything pre-filter.
-    val bo = SparkEntry.queries("q_big_orders")(spark, dir)
-      .queryExecution.optimizedPlan.toString
-    val (boInner, boSemi) = (bo.indexOf("Join Inner"), bo.indexOf("Join LeftSemi"))
-    assert(boInner >= 0 && boSemi > boInner,
-      s"q_big_orders must semi-filter the facts below the inner joins:\n${bo.take(3000)}")
+    // q_big_orders: the selective HAVING aggregate over the ONE
+    // lineitem scan is inner-joined below orders — its per-order sum is
+    // the output measure, so there is no second lineitem scan, no semi
+    // join and no re-aggregation above the joins.
+    {
+      import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+      import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join => LJoin, LogicalPlan}
+      val bo = SparkEntry.queries("q_big_orders")(spark, dir).queryExecution.optimizedPlan
+      def scans(p: LogicalPlan, col: String) =
+        p.collectLeaves().count(_.output.exists(_.name == col))
+      def hasAgg(p: LogicalPlan) = p.exists(_.isInstanceOf[Aggregate])
+      val shown = bo.toString.take(3000)
+      assert(scans(bo, "l_orderkey") == 1, s"q_big_orders must scan lineitem once:\n$shown")
+      assert(!bo.exists { case j: LJoin => j.joinType == LeftSemi; case _ => false },
+        s"q_big_orders must not semi-join:\n$shown")
+      assert(bo.collect { case a: Aggregate => a }.size == 1,
+        s"q_big_orders must aggregate once, below the joins:\n$shown")
+      assert(bo.exists {
+        case j: LJoin if j.joinType == Inner =>
+          hasAgg(j.left) && scans(j.right, "o_orderkey") == 1 ||
+            hasAgg(j.right) && scans(j.left, "o_orderkey") == 1
+        case _ => false
+      }, s"q_big_orders must inner-join the HAVING aggregate to orders:\n$shown")
+    }
 
     // q_nation_volume: the two-nation predicate reaches the nation
     // scans (pushed filter), shrinking both dim branches before any
