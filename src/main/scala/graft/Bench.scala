@@ -218,10 +218,17 @@ object Bench {
     // pre-change baseline run, indistinguishable after the fact. The
     // SHA (plus a -dirty marker for uncommitted edits) makes a
     // baseline/probe run unable to masquerade as the round artifact.
-    // Advisory only — never fails the bench (git may be absent).
+    // Advisory only — never fails the bench (git may be absent). git
+    // runs in the checkout these classes were built from (the nearest
+    // ancestor of the class directory holding `.git`), not in the
+    // JVM's cwd, which may sit in another repository or none.
     val gitSha = scala.util.Try {
+      val classes = java.nio.file.Paths.get(
+        getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+      val root = Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+        .find(d => java.nio.file.Files.exists(d.resolve(".git"))).get
       def git(args: String*): String = {
-        val p = new ProcessBuilder(("git" +: args): _*)
+        val p = new ProcessBuilder(("git" +: "-C" +: root.toString +: args): _*)
           .redirectErrorStream(true).start()
         val out = new String(p.getInputStream.readAllBytes(),
           java.nio.charset.StandardCharsets.UTF_8).trim

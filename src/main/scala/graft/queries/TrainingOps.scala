@@ -30,18 +30,14 @@ object TrainingOps {
     graft.util.ScanParallelism.spreadIfNarrow(Tables.load(s, dir, "embeddings"))
 
   /** The rare-shingle pair graph closed to components — consumed by
-    * BOTH dedup_components and dedup_keep_best. Materialized once per
-    * sweep through [[graft.util.StageCache]] so the second consumer
-    * reads the stage instead of recomputing the pair explosion + CC
-    * fixpoint (the production shape: a shared intermediate table). */
-  private def ngramComponents(s: org.apache.spark.sql.SparkSession, dir: String,
-                              d: org.apache.spark.sql.DataFrame) =
-    graft.util.StageCache.materialize(s, s"ngram-cc-k5-t0-cap100:$dir") {
-      Dedup.connectedComponents(
-        Dedup.ngramJaccardPairs(d, "doc_id", "text",
-          shingleK = 5, threshold = 0.0, maxShingleFreq = 100),
-        "doc_a", "doc_b")
-    }
+    * both dedup_components and dedup_keep_best. Each query computes it
+    * itself: a measured run pays for the whole pipeline, never reading
+    * a stage an earlier run left behind. */
+  private def ngramComponents(d: org.apache.spark.sql.DataFrame) =
+    Dedup.connectedComponents(
+      Dedup.ngramJaccardPairs(d, "doc_id", "text",
+        shingleK = 5, threshold = 0.0, maxShingleFreq = 100),
+      "doc_a", "doc_b")
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -346,7 +342,7 @@ object TrainingOps {
         |FROM documents d LEFT JOIN comp c USING (doc_id)
         |""".stripMargin) { (s, dir) =>
       val d = docs(s, dir)
-      val comp = ngramComponents(s, dir, d).withColumnRenamed("node", "doc_id")
+      val comp = ngramComponents(d).withColumnRenamed("node", "doc_id")
       d.select(col("doc_id")).join(comp, Seq("doc_id"), "left_outer")
         .select(col("doc_id"), coalesce(col("component"), col("doc_id")).as("component"))
     },
@@ -395,7 +391,7 @@ object TrainingOps {
         |""".stripMargin) { (s, dir) =>
       val d = docs(s, dir)
       Dedup.keepBest(d.select(col("doc_id"), col("n_chars")),
-        "doc_id", "n_chars", ngramComponents(s, dir, d))
+        "doc_id", "n_chars", ngramComponents(d))
     },
 
     // ---- similarity search ----------------------------------------

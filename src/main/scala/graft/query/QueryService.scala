@@ -19,6 +19,14 @@ import java.nio.file.Paths
   * driver, and a wave is sized to a budget under
   * `spark.driver.maxResultSize` (see `streamLines`); `toLocalIterator`
   * would buffer one partition but run one job per partition.
+  *
+  * A query whose whole input is small runs as one Spark job, as it
+  * would inside the reference's single-process DuckDB: `query` and
+  * `tenantQuery` install [[SmallQueries]] on the session they plan on,
+  * which coalesces each scan to one partition when the input files
+  * total at most `spark.sql.files.openCostInBytes` (4 MB by default),
+  * so aggregates, sorts, windows, set ops and joins need no exchange.
+  * Larger inputs keep Spark's distributed plan.
   */
 object QueryService {
 
@@ -28,8 +36,10 @@ object QueryService {
     (if (t.endsWith(";")) t.dropRight(1) else t).trim
   }
 
-  def query(spark: SparkSession, sql: String): DataFrame =
+  def query(spark: SparkSession, sql: String): DataFrame = {
+    SmallQueries.install(spark)
     spark.sql(cleanQuery(sql))
+  }
 
   /** Raised when a tenant query breaks out of its sandbox; the server
     * maps it to 403. */
@@ -52,6 +62,7 @@ object QueryService {
     */
   def tenantQuery(spark: SparkSession, sql: String,
                   allowedRoots: Seq[String]): DataFrame = {
+    SmallQueries.install(spark)
     val cleaned = cleanQuery(sql)
     val parsed = spark.sessionState.sqlParser.parsePlan(cleaned)
     // collectWithSubqueries everywhere: plain collect/foreach do NOT

@@ -2,6 +2,7 @@ package graft
 
 import graft.sources._
 import graft.query.QueryService
+import org.apache.spark.sql.SparkSession
 import java.io.StringWriter
 import java.nio.file.Files
 
@@ -10,16 +11,19 @@ import java.nio.file.Files
   * bulk load, then SQL it back and check the streamed encoders. */
 class IngestPipelineSpec extends SparkTestBase {
 
-  private def freshPipeline() = {
+  /** Passthrough tests pass a child session, as the server gives each
+    * database one: a passthrough query installs its planner rule on the
+    * session it runs on, which must not be the suites' shared one. */
+  private def freshPipeline(session: SparkSession = spark) = {
     val tmp = Files.createTempDirectory("graft-test").toString
-    val catalog = new GraftCatalog(spark, s"$tmp/warehouse")
+    val catalog = new GraftCatalog(session, s"$tmp/warehouse")
     val loader = new Loader(catalog)
     val sink = new NdjsonSink(s"$tmp/sink", maxRows = 1000)
     (catalog, loader, sink, new Ingest(sink))
   }
 
   test("F1 quickstart: insert event, query it back with group by") {
-    val (catalog, loader, sink, ingest) = freshPipeline()
+    val (catalog, loader, sink, ingest) = freshPipeline(spark.newSession())
     val r = ingest.insert("db1", "events_in", """{"user": "alice", "event": "click"}""")
     assert(r.fullySucceeded && r.inserted == 1)
     ingest.insert("db1", "events_in", """[{"user": "bob", "event": "click"},
@@ -32,7 +36,7 @@ class IngestPipelineSpec extends SparkTestBase {
     assert(schema("user") == "string" && schema("event") == "string")
 
     catalog.registerViews("db1")
-    val counts = QueryService.query(spark,
+    val counts = QueryService.query(catalog.spark,
       "select user, count(*) as n from events_in group by 1 order by 1;")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(counts == Seq("alice" -> 2L, "bob" -> 1L))
@@ -84,13 +88,13 @@ class IngestPipelineSpec extends SparkTestBase {
   }
 
   test("F2 roundtrip through the streamed encoders (json / ndjson / csv)") {
-    val (catalog, loader, sink, ingest) = freshPipeline()
+    val (catalog, loader, sink, ingest) = freshPipeline(spark.newSession())
     ingest.insert("db", "msgs", """{"msg": "hello world", "n": 1}""")
     ingest.insert("db", "msgs", """{"msg": "with,comma \"q\"", "n": null}""")
     sink.flushAll().foreach(loader.consume)
     catalog.registerViews("db")
 
-    val df = QueryService.query(spark, "select msg, n from msgs order by __row_id")
+    val df = QueryService.query(catalog.spark, "select msg, n from msgs order by __row_id")
 
     val j = new StringWriter(); QueryService.writeJson(df, j)
     assert(j.toString ==

@@ -2,13 +2,10 @@ package graft
 
 import graft.query.QueryService
 import graft.sources.{GraftCatalog, Loader}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import java.io.StringWriter
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The query path's fixed per-request cost: temp views are rebuilt only
   * when their table changed, the encoders run one Spark job per wave of
@@ -35,36 +32,6 @@ class QueryPathSpec extends SparkTestBase {
 
   private def count(s: SparkSession, t: String): Long =
     s.sql(s"select count(*) from $t").head().getLong(0)
-
-  /** Spark jobs `body` runs on this thread. Listener events arrive
-    * asynchronously but in order, so a marker job seen after `body`
-    * means every job of `body` has been counted. */
-  private def jobsIn(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"query-path-${java.util.UUID.randomUUID()}"
-    val jobs = new AtomicInteger
-    val markerSeen = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => jobs.incrementAndGet()
-          case g if g == group + "-marker" => markerSeen.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      body
-      sc.setJobGroup(group + "-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(markerSeen.await(30, TimeUnit.SECONDS), "listener never saw the marker job")
-      jobs.get
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("registerViews reuses a table's view while nothing changed") {
     val fx = new Fixture; import fx._
