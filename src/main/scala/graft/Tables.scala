@@ -20,30 +20,16 @@ object Tables {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // Only convert when ts actually came in as nanos-long — scaled
     // bench copies (graft.tools.ScaleData) are written with proper
-    // TIMESTAMP(MICROS) and need no conversion.
-    val fixed =
-      if (name == "events" &&
-          df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
-        // integer `div`, NOT `/`: double division loses precision on
-        // epoch-nanos (> 2^53) and shifts timestamps by up to ~128 ns
-        df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      else df
-    // graft.scan.spread=true: guard against row-group-bound scan
-    // parallelism (the local test corpus is written as ONE row group
-    // per table — sf1 lineitem is 6M rows in a single group, so every
-    // scan-fused stage runs in ONE task regardless of
-    // maxPartitionBytes; see graft.util.ScanParallelism). Off by
-    // default at load level: cheap scan-bound queries would pay an
-    // exchange for nothing — CPU-dense operators guard their own
-    // inputs instead.
-    val spread = spark.conf.getOption("graft.scan.spread")
-      .exists(_.toBoolean)
-    val minBytes = spark.conf.getOption("graft.scan.spreadMinBytes")
-      .map(_.toLong).getOrElse(8L << 20)
-    if (spread &&
-        new java.io.File(s"$dir/$name.parquet").length() >= minBytes)
-      graft.util.ScanParallelism.spreadIfNarrow(fixed)
-    else fixed
+    // TIMESTAMP(MICROS) and need no conversion. The load does not
+    // spread single-row-group files (a scan-bound query would pay an
+    // exchange for nothing); CPU-dense operators guard their own
+    // inputs with graft.util.ScanParallelism.spreadIfNarrow.
+    if (name == "events" &&
+        df.schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      // integer `div`, NOT `/`: double division loses precision on
+      // epoch-nanos (> 2^53) and shifts timestamps by up to ~128 ns
+      df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    else df
   }
 
   /** Register every table as a temp view (idempotent). */

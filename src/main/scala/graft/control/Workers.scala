@@ -14,6 +14,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 final class Workers(queue: JobQueue, loader: Loader, copier: Copier,
                     count: Int = 1, pollMs: Long = 100, maxAttempts: Int = 3) {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private val running = new AtomicBoolean(false)
   private val attempts = new java.util.concurrent.ConcurrentHashMap[Long, Integer]()
   private var threads: Seq[Thread] = Nil
@@ -47,7 +48,7 @@ final class Workers(queue: JobQueue, loader: Loader, copier: Copier,
         } catch {
           case e: Exception =>
             val n = attempts.merge(id, 1, (a, b) => a + b)
-            System.err.println(s"[workers] job $id failed (attempt $n): ${e.getMessage}")
+            log.warn(s"job $id failed (attempt $n of $maxAttempts): ${e.getMessage}")
             if (n < maxAttempts) {
               // Backoff before redelivery: transient faults (a sidecar
               // mid-commit, a metastore row lock) re-fail identically

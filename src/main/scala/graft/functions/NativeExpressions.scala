@@ -132,12 +132,9 @@ object NativeExpressions {
     while (i < 7) { x = (x << 8) | (d(i) & 0xffL); i += 1 }
     (x << 4) | ((d(7) >> 4) & 0xfL)
   }
-  /** First 16 hex chars (64 bits) of md5 as a raw bit pattern. */
-  private def md5Bits64(s: String): Long =
-    md5Bits64Bytes(s.getBytes(StandardCharsets.UTF_8))
-
-  /** Same, straight off UTF-8 bytes — UTF8String tokens hash without
-    * the decode-to-String / re-encode round trip. */
+  /** First 16 hex chars (64 bits) of md5 as a raw bit pattern, straight
+    * off UTF-8 bytes — UTF8String tokens hash without the
+    * decode-to-String / re-encode round trip. */
   private def md5Bits64Bytes(b: Array[Byte]): Long = {
     val md = md5Local.get(); md.reset()
     val d = md.digest(b)
@@ -291,39 +288,6 @@ object NativeExpressions {
       val res = new Array[AnyRef](out.size)
       val it = out.iterator(); var r = 0
       while (it.hasNext) { res(r) = UTF8String.fromString(it.next()); r += 1 }
-      new GenericArrayData(res)
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** ALL k-word shingles in position order (no distinct, no short-doc
-    * fallback — inputs shorter than k yield an empty array). The
-    * positional sibling of [[WordShingles]]: posexplode over the result
-    * aligns each shingle with its starting word offset, which exact
-    * substring-span dedup needs to reconstruct covered intervals. */
-  case class WordShinglesAll(child: Expression, k: Int)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def nullSafeEval(v: Any): Any = {
-      val arr = v.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      if (n < k) return new GenericArrayData(Array.empty[AnyRef])
-      val toks = new Array[String](n)
-      var i = 0
-      while (i < n) {
-        toks(i) = if (arr.isNullAt(i)) "" else arr.getUTF8String(i).toString
-        i += 1
-      }
-      val res = new Array[AnyRef](n - k + 1)
-      val sb = new java.lang.StringBuilder()
-      var s = 0
-      while (s <= n - k) {
-        sb.setLength(0)
-        var j = 0
-        while (j < k) { if (j > 0) sb.append(' '); sb.append(toks(s + j)); j += 1 }
-        res(s) = UTF8String.fromString(sb.toString)
-        s += 1
-      }
       new GenericArrayData(res)
     }
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
@@ -502,8 +466,8 @@ object NativeExpressions {
   }
 
   /** Positional k-word shingle hashes over `split(lower(text), " ")`
-    * (single-space separator, limit -1, empty tokens preserved —
-    * the [[WordShinglesAll]] tokenization): slot i holds the hash of
+    * (single-space separator, limit -1, empty tokens preserved):
+    * slot i holds the hash of
     * the window starting at token i, length max(0, tokens-k+1), NO
     * dedup. The positional twin of [[ShingleHashes]] for the
     * substring-span operators, where the gram is a join key and its
@@ -557,8 +521,8 @@ object NativeExpressions {
     * (doc, gram) shuffle, a join and two per-doc windows PER n — this
     * is one byte walk plus an open-addressed count map per n, and the
     * whole operator becomes scan+project with NO exchange at any
-    * scale. Tokenization: split(lower, " ") limit -1 ([[WordShinglesAll]]
-    * semantics, empty tokens preserved). Grams are compared by 64-bit
+    * scale. Tokenization: split(lower, " ") limit -1 (the
+    * [[ShingleHashesAll]] semantics, empty tokens preserved). Grams are compared by 64-bit
     * hash (within-doc collision odds ~windows²/2⁶⁴). */
   case class RepeatedNgramCoverage(child: Expression, ns: Seq[Int])
       extends UnaryExpression with CodegenFallback {
@@ -2112,8 +2076,6 @@ object NativeExpressions {
     ExpressionUtils.column(RollingFingerprint(ExpressionUtils.expression(text), k))
   def word_shingles(tokens: Column, k: Int): Column =
     ExpressionUtils.column(WordShingles(ExpressionUtils.expression(tokens), k))
-  def word_shingles_all(tokens: Column, k: Int): Column =
-    ExpressionUtils.column(WordShinglesAll(ExpressionUtils.expression(tokens), k))
   def shingle_hashes(text: Column, k: Int): Column =
     ExpressionUtils.column(ShingleHashes(ExpressionUtils.expression(text), k))
   def sorted_intersect_count(a: Column, b: Column): Column =

@@ -166,10 +166,6 @@ object TextFunctions {
     * select fields. */
   def piiScan(text: Column): Column = NativeExpressions.pii_scan(text)
 
-  def piiEmailCount(text: Column): Column = piiScan(text).getField("n_emails")
-  def piiIpCount(text: Column): Column = piiScan(text).getField("n_ips")
-  def piiRedact(text: Column): Column = piiScan(text).getField("redacted")
-
   /** Deterministic stratified sampling: keep a row iff its md5-derived
     * per-mille bucket falls under its stratum's rate. Unlike
     * `df.stat.sampleBy` (seeded RNG, engine-specific), the hash makes

@@ -73,17 +73,6 @@ object AsOfJoin {
     taggedRight.unionByName(taggedLeft)
   }
 
-  /** Same size switch as ScalableWindow: below the limit the plain
-    * per-key window wins (flat range-repartition + carry cost); above
-    * it the ranged-carry plan removes the single-task-per-key bound —
-    * and with it the skew hazard of a dominant key. */
-  private def smallInput(df: DataFrame): Boolean = {
-    val limit = df.sparkSession.conf
-      .getOption("graft.window.singleTaskLimitBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(limit)
-  }
-
   /** Range-partitioned as-of carry — the skew-proof big arm. The
     * tagged union is range-repartitioned on (keys, __ts, __tag) in
     * WINDOW ORDER, so a hot key splits across as many time-slice
@@ -109,9 +98,7 @@ object AsOfJoin {
   private def rangedCarry(u: DataFrame, keys: Seq[String], asc: Boolean,
       payload: Column, outB: String, forwardOut: Option[String],
       checkpoint: DataFrame => DataFrame = graft.util.Checkpoints.pin): DataFrame = {
-    val ss = u.sparkSession
-    val n = ss.conf.getOption("graft.asof.rangePartitions").map(_.toInt)
-      .getOrElse(ss.sessionState.conf.numShufflePartitions)
+    val n = u.sparkSession.sessionState.conf.numShufflePartitions
     val order =
       if (asc) Seq(col("__ts").asc, col("__tag").asc)
       else Seq(col("__ts").desc, col("__tag").asc)
@@ -188,7 +175,7 @@ object AsOfJoin {
       struct((rightCols :+ matchedTs).map(col): _*))
     val union = taggedUnion(left, right, keys, leftTs, rightTs, rightCols)
     val carried =
-      if (smallInput(union))
+      if (ScalableWindow.smallInput(union))
         union.withColumn("__payload", last(payload, ignoreNulls = true).over(w))
       else
         rangedCarry(union, keys, asc = direction == "backward", payload,
@@ -254,7 +241,7 @@ object AsOfJoin {
       struct((rightCols :+ matchedTs).map(col): _*))
     val union = taggedUnion(left, right, keys, leftTs, rightTs, rightCols)
     val carried =
-      if (smallInput(union))
+      if (ScalableWindow.smallInput(union))
         union
           .withColumn("__b", last(payload, ignoreNulls = true).over(wb))
           .withColumn("__f", first(payload, ignoreNulls = true).over(wf))

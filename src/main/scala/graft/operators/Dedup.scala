@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.GraftConf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -40,15 +41,6 @@ object Dedup {
   }
 
   // ---- MinHash + LSH ----------------------------------------------
-
-  private val MersennePrime = 2147483647L // 2^31 - 1
-
-  /** Deterministic (a, b) hash-family parameters, seeded. */
-  private def hashParams(numHashes: Int, seed: Long): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(seed)
-    Seq.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1).toLong,
-      rnd.nextInt(Int.MaxValue).toLong))
-  }
 
   /** (doc id, minhash signature array, shingle count). Computed
     * ROW-LOCAL by a native Catalyst expression
@@ -375,14 +367,9 @@ object Dedup {
     // construction — both forms emit each qualifying unordered
     // fingerprint pair exactly once per band and share the dedup +
     // expansion below.
-    val rowFormMax = sigs.sparkSession.conf
-      .getOption("graft.hamming.rowFormMaxBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(256L << 10)
-    val rowForm = docs.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(rowFormMax)
-    val chunkRows = sigs.sparkSession.conf
-      .getOption("graft.hamming.chunkRows")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(65536)
+    val rowForm = GraftConf.fitsIn(docs,
+      GraftConf.bytes(sigs.sparkSession, "graft.hamming.rowFormMaxBytes", 256L << 10))
+    val chunkRows = GraftConf.int(sigs.sparkSession, "graft.hamming.chunkRows", 65536)
     def packedFpPairs: DataFrame = {
     val sizes = banded.groupBy("band", "bucket")
       .agg(count(lit(1)).as("__bs"))
@@ -519,8 +506,7 @@ object Dedup {
       pairs.sparkSession.conf.get("spark.driver.maxResultSize", "1g"))
     val resultCap = if (maxResult <= 0) Long.MaxValue else maxResult / 20
     val limit = math.min(resultCap,
-      pairs.sparkSession.conf.getOption("graft.cc.localEdgeLimit")
-        .map(_.toLong).getOrElse(localEdgeLimit))
+      GraftConf.long(pairs.sparkSession, "graft.cc.localEdgeLimit", localEdgeLimit))
     var cnt = edges.count()
     if (cnt <= limit) return localComponents(edges)
 
@@ -541,13 +527,11 @@ object Dedup {
     // If contraction stalls above the limit (forest-shaped input:
     // edges ≈ nodes − components is the floor), fall through to the
     // star loop ON the contracted list — never worse than the input.
-    val contractRounds = pairs.sparkSession.conf
-      .getOption("graft.cc.contractRounds").map(_.toInt).getOrElse(3)
-    // graft.cc.verbose=true: per-round contraction telemetry on stderr
-    // (edge counts, shard count, shrink ratio) — how CcProbe records
-    // the multi-round behavior at probe scales.
-    val verbose = pairs.sparkSession.conf
-      .getOption("graft.cc.verbose").exists(_.toBoolean)
+    // Per-round edge counts, shard counts and shrink ratios at probe
+    // scales are recorded in BENCH_LOCAL.md, "Sharded union-find
+    // contraction probe" (round 9) and "The ≥300M-edge contraction
+    // probe" (round 14).
+    val contractRounds = GraftConf.int(pairs.sparkSession, "graft.cc.contractRounds", 3)
     var round = 0
     var shrinking = true
     while (cnt > limit && round < contractRounds && shrinking) {
@@ -558,10 +542,6 @@ object Dedup {
         .transform(graft.util.Checkpoints.pin)
       val c2 = contracted.count()
       shrinking = c2 < cnt - cnt / 10
-      if (verbose) System.err.println(
-        f"[cc] contraction round ${round + 1}: $cnt%,d -> $c2%,d edges " +
-          f"(shards=$parts, shrink=${1.0 - c2.toDouble / cnt}%.3f, " +
-          f"${if (!shrinking) "STALL -> star loop on contracted list" else "continue"})")
       edges = contracted
       cnt = c2
       round += 1
@@ -898,7 +878,7 @@ object Dedup {
     // cost controls keep the probe honest at bench-visible scales (the
     // unsampled, uncached probe measured 28 CPU-s / 4.4 s wall at sf1
     // — 44% of the query it was steering):
-    //   1. DOC SAMPLING (graft.ppjoin.probeSample, default 16): only
+    //   1. DOC SAMPLING (N = 16): only
     //      docs with pmod(xxhash64(doc), N) = 0 contribute, the sum
     //      scales back by N — unbiased for the per-doc density the cut
     //      compares against, ~N× cheaper.
@@ -914,8 +894,8 @@ object Dedup {
     // it won the A/B at every measured scale (both prefixes are
     // threshold-shortened, so the positional aggregate is far narrower
     // than containment's full-rare-list index side).
-    val modeConf = df.sparkSession.conf.getOption("graft.ppjoin.mode")
-      .getOrElse("auto")
+    val modeConf = GraftConf.choice(df.sparkSession, "graft.ppjoin.mode", "auto",
+      Seq("auto", "full", "length", "off"))
     val mode =
       if (modeConf != "auto") modeConf
       else if (!containment) "full"
@@ -927,10 +907,8 @@ object Dedup {
             maxShingleFreq, threshold))
         }
         cacheKey.flatMap(k => Option(ppjoinArmCache.get(k))).getOrElse {
-          val densityCut = df.sparkSession.conf
-            .getOption("graft.ppjoin.autoDensity").map(_.toDouble).getOrElse(64.0)
-          val sampleMod = math.max(1, df.sparkSession.conf
-            .getOption("graft.ppjoin.probeSample").map(_.toInt).getOrElse(16))
+          val densityCut = 64.0
+          val sampleMod = 16
           val nDocs = math.max(1L, docSets.count()) // forces the pin; reused below
           val predRow = prefixes
             .filter(pmod(xxhash64(col("doc")), lit(sampleMod)) === 0)
@@ -939,11 +917,6 @@ object Dedup {
             (if (predRow.isNullAt(0)) 0L else predRow.getLong(0)) * sampleMod
           val density = predicted.toDouble / nDocs
           val picked = if (density >= densityCut) "full" else "length"
-          if (df.sparkSession.conf.getOption("graft.ppjoin.verbose")
-              .exists(_.toBoolean))
-            System.err.println(f"[ppjoin] auto: predictedCandidates~$predicted " +
-              f"(sample 1/$sampleMod) docs=$nDocs density=$density%.1f " +
-              f"cut=$densityCut%.1f -> $picked")
           cacheKey.foreach(k => ppjoinArmCache.put(k, picked))
           picked
         }
@@ -1167,11 +1140,8 @@ object Dedup {
     // sf10 ≈ 12 MB keeps it. The slim NULL-signature projection stays
     // in both routes (strictly smaller pin either way); output is
     // identical — the exchange only places rows.
-    val layoutPinMin = incoming.sparkSession.conf
-      .getOption("graft.incremental.layoutPinMinBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(2L << 20)
-    val wantLayoutPin = incoming.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(layoutPinMin)
+    val wantLayoutPin = !GraftConf.fitsIn(incoming,
+      GraftConf.bytes(incoming.sparkSession, "graft.incremental.layoutPinMinBytes", 2L << 20))
     val slim =
       bySignature(minhashSignatures(incoming, idCol, textCol, shingleK, numHashes, seed, useMd5, oph))
         .withColumn("__rep", min(col(idCol)).over(w))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.GraftConf
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -78,8 +79,7 @@ object Graph {
       spark.conf.get("spark.driver.maxResultSize", "1g"))
     val resultCap = if (maxResult <= 0) Long.MaxValue else maxResult / 20
     val limit = math.min(resultCap,
-      spark.conf.getOption("graft.pagerank.localEdgeLimit")
-        .map(_.toLong).getOrElse(localEdgeLimit))
+      GraftConf.long(spark, "graft.pagerank.localEdgeLimit", localEdgeLimit))
 
     if (sym.count() <= limit) localPageRank(sym, allNodes, iters)
     else distributedPageRank(sym, allNodes, iters)
@@ -105,8 +105,7 @@ object Graph {
     // broadcast bus and an iteration costs ONE exchange (the
     // sum-by-destination); past it, shuffled joins against the
     // pre-partitioned edge list.
-    val bcastLimit = allNodes.sparkSession.conf
-      .getOption("graft.pagerank.broadcastNodes").map(_.toLong).getOrElse(4000000L)
+    val bcastLimit = GraftConf.long(allNodes.sparkSession, "graft.pagerank.broadcastNodes", 4000000L)
     val useBroadcast = all.count() <= bcastLimit
     def side(df: DataFrame): DataFrame = if (useBroadcast) broadcast(df) else df
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.GraftConf
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -31,18 +32,6 @@ import org.apache.spark.sql.functions._
   */
 object ScalableWindow {
 
-  /** Default checkpoint strategy for the two-pass window scheme
-    * (pins the sampled range boundaries — see [[groupRowNumber]]):
-    * `localCheckpoint()` (executor-memory blocks, fastest) unless
-    * `graft.checkpoint.reliable=true`, which switches EVERY consumer
-    * — Bench, Verify, the query packs, the server — to reliable
-    * `df.checkpoint()`, recoverable from storage after executor loss.
-    * The checkpoint location comes from `graft.checkpoint.dir` if the
-    * SparkContext doesn't already have one (point it at HDFS/object
-    * storage on a cluster). One switch, all call sites. */
-  def defaultCheckpoint(df: DataFrame): DataFrame =
-    graft.util.Checkpoints.pin(df)
-
   /** Size-adaptive arm switch for [[groupRowNumber]] /
     * [[groupedPrefixSum]] (same pattern as [[exactPercentiles]]):
     * below the limit the plain window operator wins — the distributed
@@ -53,13 +42,11 @@ object ScalableWindow {
     * construction: the hazard is the largest GROUP in one task, and
     * whole-input ≤ limit bounds every group. Tunable via
     * `graft.window.singleTaskLimitBytes` (default 256 MiB ≈ a few
-    * seconds of single-task sort worst-case, the break-even band). */
-  private def smallInput(df: DataFrame): Boolean = {
-    val limit = df.sparkSession.conf
-      .getOption("graft.window.singleTaskLimitBytes")
-      .map(_.toLong).getOrElse(256L * 1024 * 1024)
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(limit)
-  }
+    * seconds of single-task sort worst-case, the break-even band).
+    * [[AsOfJoin]] routes its per-key window on the same switch. */
+  private[operators] def smallInput(df: DataFrame): Boolean =
+    GraftConf.fitsIn(df,
+      GraftConf.bytes(df.sparkSession, "graft.window.singleTaskLimitBytes", 256L << 20))
 
   /** Adds `out` = 1-based global row number of each row within its
     * group, ordered by orderCols (which must be non-null and unique
@@ -176,9 +163,7 @@ object ScalableWindow {
                        singleNodeAggLimitBytes: Long): DataFrame = {
     val valueCols = specs.map(_._2).distinct
     val base = df.select((groupCol +: valueCols).map(col): _*)
-    val big = base.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(singleNodeAggLimitBytes)
-    if (!big)
+    if (GraftConf.fitsIn(base, singleNodeAggLimitBytes))
       df.groupBy(groupCol).agg(
         percentile(col(specs.head._2), lit(specs.head._3)).as(specs.head._1),
         specs.tail.map { case (name, v, q) =>
@@ -247,6 +232,13 @@ object ScalableWindow {
     *     per-flag scalars broadcast back. Identical output — the
     *     equivalence is spec-checked on a tied corpus — but no task
     *     ever sorts more than |rows|/numPartitions.
+    *
+    * `orderIsUnique = true` is a PRECONDITION the caller guarantees,
+    * not a hint: (l_quantity, l_orderkey, l_linenumber) must be unique
+    * within each l_returnflag. The big arm then skips peer recovery,
+    * so on tied order keys it returns wrong results: rank equals
+    * row_number and cume_dist counts rows up to the current one, not
+    * its last peer. The small arm ignores the flag.
     */
   def analyticRankQuery(lineitem: DataFrame,
                         singleTaskSortLimitBytes: Long,
@@ -255,14 +247,9 @@ object ScalableWindow {
     val base = lineitem.select(
       "l_returnflag", "l_quantity", "l_orderkey", "l_linenumber")
     // Threshold overridable for measurement (A/B at any SF without a
-    // recompile); malformed values fall back to the caller's limit.
-    val limit = lineitem.sparkSession.conf
-      .getOption("graft.window.analyticSortLimitBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(singleTaskSortLimitBytes)
-    val big = base.queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(limit)
-    if (!big) {
+    // recompile).
+    if (GraftConf.fitsIn(base, GraftConf.bytes(lineitem.sparkSession,
+        "graft.window.analyticSortLimitBytes", singleTaskSortLimitBytes))) {
       val order = Seq(col("l_quantity"), col("l_orderkey"), col("l_linenumber"))
       val w = Window.partitionBy("l_returnflag").orderBy(order: _*)
       val wRun = w.rowsBetween(Window.unboundedPreceding, 0)

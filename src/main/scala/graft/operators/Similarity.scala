@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.GraftConf
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,18 +19,6 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.NativeExpressions.cosine_sim(
       a.cast("array<double>"), b.cast("array<double>"))
-
-  def dotProduct(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
-
-  def l2Norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, v) => acc + v))
-
-  /** Cosine when both norms are already materialized — pairwise ops
-    * precompute norms once per row instead of once per PAIR, saving
-    * two array passes out of three in the O(n·m) inner loop. */
-  def cosinePrenormed(a: Column, b: Column, na: Column, nb: Column): Column =
-    dotProduct(a, b) / (na * nb)
 
   /** Exact top-k neighbors for each query vector (brute force).
     * Queries are broadcast — the corpus is scanned once, never
@@ -313,8 +302,7 @@ object Similarity {
                                seed: Int = 42,
                                maxBucketSize: Int = Int.MaxValue): DataFrame = {
     val spark = corpus.sparkSession
-    val chunkRows = spark.conf.getOption("graft.neardup.lshChunkRows")
-      .map(_.toInt).getOrElse(4096)
+    val chunkRows = GraftConf.int(spark, "graft.neardup.lshChunkRows", 4096)
     val vecs = corpus.select(col(idCol).cast("long").as("__id"),
       col(vecCol).cast("array<double>").as("__v"))
     val bucketed = vecs
@@ -369,9 +357,7 @@ object Similarity {
     // of slim edge rows) consumed twice immediately.
     // `graft.neardup.packPin` overrides the route for A/B and specs;
     // reliable-checkpoint deployments inherit the usual pin contract.
-    val packPin = spark.conf.getOption("graft.neardup.packPin")
-      .flatMap(v => scala.util.Try(v.trim.toBoolean).toOption)
-      .getOrElse(!spark.sparkContext.isLocal)
+    val packPin = GraftConf.bool(spark, "graft.neardup.packPin", !spark.sparkContext.isLocal)
     val packed =
       if (!packPin) packed0
       else {
@@ -439,8 +425,7 @@ object Similarity {
     val meanDim = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
     // packed struct<id:long, vec:array<double>> ≈ 8 + 16 + 8·dim bytes
     val totalBytes = (n * (meanDim * 8 + 24)).toLong
-    val broadcastLimit = spark.conf.getOption("graft.neardup.broadcastBytes")
-      .map(_.toLong).getOrElse(256L << 20)
+    val broadcastLimit = GraftConf.bytes(spark, "graft.neardup.broadcastBytes", 256L << 20)
     if (totalBytes <= broadcastLimit) {
       val chunked = normed
         .groupBy(pmod(col("__id"), lit(par)).as("__blk"))
@@ -465,8 +450,7 @@ object Similarity {
       // to die on the driver when someone points it at a corpus past
       // the broadcast clamp. Communication is C·|corpus| (each chunk
       // meets every other), the classic blocked all-pairs tradeoff.
-      val chunkBytes = spark.conf.getOption("graft.neardup.chunkBytes")
-        .map(_.toLong).getOrElse(64L << 20)
+      val chunkBytes = GraftConf.bytes(spark, "graft.neardup.chunkBytes", 64L << 20)
       val nChunks = math.max(2L, (totalBytes + chunkBytes - 1) / chunkBytes)
       val packedChunks = normed
         .groupBy(pmod(col("__id"), lit(nChunks)).as("__blk"))
@@ -542,8 +526,7 @@ object Similarity {
                     checkpoint: DataFrame => DataFrame =
                       graft.util.Checkpoints.pin(_)): DataFrame = {
     val spark = assigned.sparkSession
-    val chunkRows = spark.conf.getOption("graft.neardup.lshChunkRows")
-      .map(_.toInt).getOrElse(4096)
+    val chunkRows = GraftConf.int(spark, "graft.neardup.lshChunkRows", 4096)
     val par = spark.sparkContext.defaultParallelism
     val vecs = checkpoint(assigned.select(col("cell"),
       col(idCol).cast("long").as("__id"),
@@ -562,9 +545,7 @@ object Similarity {
     // sf10 (50k rows, ~26 MB) keeps the kernel. Identical output —
     // both forms score every within-cell pair once (id_a < id_b) and
     // the policy's exact round-then-compare applies in both.
-    val rowFormMax = spark.conf.getOption("graft.neardup.rowFormMaxBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).getOrElse(4L << 20)
-    if (vecs.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(rowFormMax)) {
+    if (GraftConf.fitsIn(vecs, GraftConf.bytes(spark, "graft.neardup.rowFormMaxBytes", 4L << 20))) {
       val a = vecs.select(col("cell"), col("__id").as("__ida"), col("__v").as("__va"))
       val b = vecs.select(col("cell"), col("__id").as("__idb"), col("__v").as("__vb"))
       return a.join(b, Seq("cell"))
@@ -669,10 +650,8 @@ object Similarity {
                           queries: DataFrame, queryIdCol: String, queryVecCol: String,
                           k: Int, stride: Int = 0, nProbe: Int = 3,
                           singleScanLimitBytes: Long = 8L << 20): DataFrame = {
-    val big = corpus.select(col(idCol), col(vecCol), col(labelCol))
-      .queryExecution.optimizedPlan.stats.sizeInBytes >
-      BigInt(singleScanLimitBytes)
-    if (!big)
+    if (GraftConf.fitsIn(corpus.select(col(idCol), col(vecCol), col(labelCol)),
+        singleScanLimitBytes))
       knnClassify(corpus, idCol, vecCol, labelCol,
         queries, queryIdCol, queryVecCol, k)
     else {

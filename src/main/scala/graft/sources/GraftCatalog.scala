@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.functions.TypeLattice
+import graft.util.GraftConf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import org.apache.spark.sql.types._
@@ -432,10 +433,11 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * committer's `_temporary/0` under the output path, so one job's
     * commit sweeps the other's finished task files into the table and
     * its cleanup deletes the rival's in-flight staging. The
-    * IngestProbe run that motivated this surfaced both faces at once —
-    * racing loads dying with "_temporary/0 does not exist" AND ~15k
-    * duplicate rows published by the winners' commits before the
-    * losers retried.
+    * sustained-ingest probe that motivated this (BENCH_LOCAL.md,
+    * "IngestProbe: sustained HTTP→queryable rate + the committer
+    * race") surfaced both faces at once — racing loads dying with
+    * "_temporary/0 does not exist" AND ~15k duplicate rows published
+    * by the winners' commits before the losers retried.
     *
     * Each call therefore writes (mode=overwrite) into its own
     * `.stage/<key>` directory — committer isolation — then renames the
@@ -745,8 +747,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
              catch { case _: java.io.FileNotFoundException => return Set.empty }
     val ck = db + "/" + table
     val mtime = st.getModificationTime
-    val slackMs = scala.util.Try(
-      spark.conf.get("graft.commits.mtimeSlackMs").toLong).getOrElse(2000L)
+    val slackMs = GraftConf.long(spark, "graft.commits.mtimeSlackMs", 2000L)
     val cached = committedCache.get(ck)
     if (cached != null && mtime > 0 && cached._1 == mtime &&
         cached._2 - cached._1 > slackMs)
@@ -761,7 +762,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   }
 
   private def strictCommits: Boolean =
-    spark.conf.getOption("graft.warehouse.strictCommits").exists(_.equalsIgnoreCase("true"))
+    GraftConf.bool(spark, "graft.warehouse.strictCommits", false)
 
   /** Read the table under its full sidecar schema (partition columns
     * resolve from the directory layout by name).
@@ -875,9 +876,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       val cd = commitsDir(db, table)
       if (fs.exists(cd)) fs.listStatus(cd).foreach(st => fs.delete(st.getPath, false))
       committedCache.remove(db + "/" + table)
-      val keepOld = spark.conf.getOption("graft.warehouse.keepOldGen")
-        .exists(_.equalsIgnoreCase("true"))
-      if (!keepOld) fs.delete(cur, true)
+      if (!GraftConf.bool(spark, "graft.warehouse.keepOldGen", false)) fs.delete(cur, true)
       // older grace generations from previous keepOldGen runs
       val GenName = "data(-\\d+)?".r
       fs.listStatus(tdir).foreach { st =>

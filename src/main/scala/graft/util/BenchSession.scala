@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE place the bench/probe session recipe lives.
   *
-  * [[graft.Bench]] and the attribution probes
-  * ([[graft.tools.StageProbe]], [[graft.tools.StatsProbe]]) must run
+  * [[graft.Bench]] and the attribution probe
+  * ([[graft.tools.StageProbe]]; the stats probe whose readings
+  * BENCH_LOCAL.md "Size-adaptive packed-kernel floors" cites) must run
   * the SAME conf: a probe that omits Bench's single-JVM settings (the
   * 512m measured-stats broadcast threshold, the objectHashAggregate
   * fallback threshold, codegen cache sizing) can pick a DIFFERENT

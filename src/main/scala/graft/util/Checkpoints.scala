@@ -27,8 +27,7 @@ import org.apache.spark.storage.StorageLevel
   * the 300M-edge contraction probe: two deserialized 300M-row pins
   * (the probe's input pin + the canonical-edges pin inside
   * connectedComponents) OOM'd an 80 GB heap; serialized they fit in
-  * ~10 GB combined. `graft.checkpoint.storage` overrides (any
-  * `StorageLevel.fromString` name) for A/B.
+  * ~10 GB combined.
   */
 object Checkpoints {
 
@@ -46,12 +45,12 @@ object Checkpoints {
   def pin(df: DataFrame, eager: Boolean): DataFrame = {
     val ss = df.sparkSession
     val pinned =
-      if (ss.conf.getOption("graft.checkpoint.reliable").exists(_.toBoolean)) {
+      if (GraftConf.bool(ss, "graft.checkpoint.reliable", false)) {
         if (ss.sparkContext.getCheckpointDir.isEmpty)
-          ss.conf.getOption("graft.checkpoint.dir")
+          GraftConf.string(ss, "graft.checkpoint.dir")
             .foreach(ss.sparkContext.setCheckpointDir)
         df.checkpoint(eager)
-      } else df.localCheckpoint(eager, localStorage(ss))
+      } else df.localCheckpoint(eager, StorageLevel.MEMORY_AND_DISK_SER)
     // The checkpoint inherits the origin plan's size ESTIMATE, which
     // descends from compressed file bytes — for text/array data that
     // undercounts the in-memory relation by 10-100× and makes the
@@ -64,17 +63,10 @@ object Checkpoints {
     // broadcast decisions at every scale); a lazy pin strips the
     // estimate and is statically non-broadcastable, with AQE still
     // broadcasting from actual runtime shuffle sizes where a side is
-    // genuinely small. `graft.checkpoint.originStats=true` restores
-    // the inherited-estimate behavior.
-    if (ss.conf.getOption("graft.checkpoint.originStats").exists(_.toBoolean)) pinned
-    else scala.util.Try(org.apache.spark.sql.graft.Bridge.measuredPinStats(pinned))
+    // genuinely small.
+    scala.util.Try(org.apache.spark.sql.graft.Bridge.measuredPinStats(pinned))
       .getOrElse(pinned) // stats are advisory — never fail a pin over them
   }
-
-  private def localStorage(ss: org.apache.spark.sql.SparkSession): StorageLevel =
-    ss.conf.getOption("graft.checkpoint.storage")
-      .flatMap(v => scala.util.Try(StorageLevel.fromString(v.trim)).toOption)
-      .getOrElse(StorageLevel.MEMORY_AND_DISK_SER)
 
   /** Lazy variant for lineage caps inside iterative loops. */
   def pinLazy(df: DataFrame): DataFrame = pin(df, eager = false)

@@ -97,9 +97,7 @@ object ScanParallelism {
     val par = spark.sparkContext.defaultParallelism
     val files = df.inputFiles
     if (files.isEmpty || files.length >= par) return df
-    val floor = spark.conf.getOption("graft.spread.minBytes")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .getOrElse(1L << 20)
+    val floor = GraftConf.bytes(spark, "graft.spread.minBytes", 1L << 20)
     if (!totalBytes(df, files).exists(_ >= floor)) return df
     // Idempotence: guards now sit at BOTH the table-helper level and
     // inside CPU-dense operators, so the same input can be checked

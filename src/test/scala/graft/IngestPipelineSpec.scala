@@ -248,7 +248,8 @@ class IngestPipelineSpec extends SparkTestBase {
     // Each append stages in its own directory before rename-publishing
     // (GraftCatalog.publishStage) — under the pre-r12 shared
     // mode("append") these 8 concurrent writers raced on the output
-    // dir's _temporary/0 (IngestProbe measured both the
+    // dir's _temporary/0 (BENCH_LOCAL.md, "IngestProbe: sustained
+    // HTTP→queryable rate + the committer race", records both the
     // FileNotFoundException aborts and the duplicate rows the rival
     // commits published).
     import org.apache.spark.sql.functions.col

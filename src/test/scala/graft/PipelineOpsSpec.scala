@@ -465,16 +465,30 @@ class PipelineOpsSpec extends SparkTestBase {
     val edges = raw.toDF("a", "b")
     val nodes = ((0L until 40L) ++ Seq(200L, 201L)).toDF("id")
 
-    def run(limit: String): Map[Long, (Long, Long)] = {
+    def run(limit: String, broadcastNodes: String = "4000000"): Map[Long, (Long, Long)] = {
       spark.conf.set("graft.pagerank.localEdgeLimit", limit)
+      spark.conf.set("graft.pagerank.broadcastNodes", broadcastNodes)
       try operators.Graph.pageRankFixedPoint(edges, "a", "b", nodes, "id", iters = 4)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      finally spark.conf.unset("graft.pagerank.localEdgeLimit")
+      finally {
+        spark.conf.unset("graft.pagerank.localEdgeLimit")
+        spark.conf.unset("graft.pagerank.broadcastNodes")
+      }
     }
     val local = run("1000000")
     val dist = run("0")
+    // the distributed loop with the rank side shuffled, not broadcast:
+    // the arm a graph past the broadcast node limit runs (automatic
+    // broadcast off too, or the planner broadcasts the tiny rank table
+    // on its own)
+    val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val shuffled =
+      try run("0", broadcastNodes = "0")
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
     assert(local.size == 42)
     assert(local == dist)
+    assert(local == shuffled)
     assert(local(200L) == ((0L, 150000L)))
     assert(!local.contains(99L)) // foreign endpoint holds no rank row
   }

@@ -133,8 +133,9 @@ class TrainingOpsSpec extends SparkTestBase {
     // The uncollapsed reference plan (band every DOC, count buckets
     // in doc rows, drop oversized, self-join, verify per doc pair —
     // the shape minhashPairs had before the distinct-signature
-    // pre-collapse) is single-sourced in ReferencePlans so this spec
-    // and DupDenseProbe can never drift apart.
+    // pre-collapse) lives in ReferencePlans; its timing against the
+    // collapsed plan is in BENCH_LOCAL.md, "MinHash distinct-signature
+    // pre-collapse (DupDenseProbe)".
     def uncollapsed(df: org.apache.spark.sql.DataFrame, shingleK: Int,
                     numHashes: Int, bands: Int, threshold: Double,
                     maxBucketSize: Int, useMd5: Boolean, oph: Boolean) =

@@ -199,7 +199,7 @@ class UtilSpec extends SparkTestBase {
         "just-below-floor input must not be spread")
       // a malformed floor value falls back to the 1 MiB default (no
       // throw out of query planning), under which the fixture is tiny
-      spark.conf.set("graft.spread.minBytes", "64m")
+      spark.conf.set("graft.spread.minBytes", "64 megs")
       assert(ScanParallelism.spreadIfNarrow(emb) eq emb,
         "malformed floor must fail safe to the default")
       spark.conf.set("graft.spread.minBytes", "0")

@@ -12,14 +12,11 @@ import graft.operators.Dedup
   * pre-collapse), count buckets in doc rows, drop oversized buckets,
   * self-join, verify per doc pair. `TrainingOpsSpec` proves the
   * production plan bit-identical to it across the kernel/cap/threshold
-  * matrix, and `DupDenseProbe` times the two head-to-head on
-  * replicated corpora; both consume THIS single definition so the
-  * baseline cannot drift between the spec and the probe (it used to be
-  * hand-copied in each).
+  * matrix; the head-to-head timing on replicated corpora is recorded
+  * in BENCH_LOCAL.md, "MinHash distinct-signature pre-collapse".
   *
-  * Not part of the public operator surface — a measurement/test
-  * artifact that must stay byte-for-byte equivalent to the historical
-  * plan, not improve.
+  * A test reference that must stay byte-for-byte equivalent to the
+  * historical plan, not improve.
   */
 object ReferencePlans {
   def uncollapsedMinhashPairs(df: DataFrame, idCol: String, textCol: String,
