@@ -3,16 +3,19 @@ package graft.queries
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** The delegated relational SQL surface (SURVEY.md §2B): everything the
-  * reference passes through to its backend database, re-expressed with
-  * the Spark DataFrame API so Catalyst handles pushdown / pruning /
-  * join strategy / codegen. Each entry carries a DuckDB oracle.
+  * reference passes through to its backend database. Where the DuckDB
+  * oracle text also runs in Spark, the entry is that one text
+  * ([[QueryDef.sql]]) and Catalyst does pushdown / pruning / join
+  * strategy / codegen, as it does for a tenant's passthrough SQL. A
+  * DataFrame body remains where the DuckDB text does not run in Spark
+  * (a DuckDB-only function or syntax) or where the body carries a plan
+  * choice the planner does not make (a hint, an explicit broadcast).
   *
   * Scale notes (100 TB design intent):
-  *  - dimension joins (region/nation/supplier) are explicitly
-  *    broadcast — no shuffle of the fact side;
+  *  - dimension joins (region/nation/supplier) broadcast — no shuffle
+  *    of the fact side;
   *  - fact-fact joins (lineitem ⋈ orders) shuffle on the join key and
   *    rely on AQE for skew; at warehouse scale both sides would be
   *    bucketed on orderkey, making this a zero-shuffle join;
@@ -33,19 +36,14 @@ object Relational {
   val defs: Seq[QueryDef] = Seq(
 
     // ---- scan / projection / filter --------------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_scan_filter",
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
         |FROM lineitem
         |WHERE l_shipdate < TIMESTAMP '1995-01-01' AND l_quantity > 45
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") < lit("1995-01-01").cast("timestamp") &&
-          col("l_quantity") > 45)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_projection",
       // Money math in exact DECIMAL on both sides: rounding a raw double
       // product ties differently between engines (DuckDB nearbyint vs
@@ -58,18 +56,10 @@ object Relational {
         |             * CAST(1 + CAST(l_tax AS DECIMAL(4,2)) AS DECIMAL(4,2)), 4) AS DOUBLE) AS charged,
         |  CAST(l_quantity AS BIGINT) AS qty_int
         |FROM lineitem
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        round(col("l_extendedprice").cast("decimal(12,2)") *
-          (lit(1) - col("l_discount").cast("decimal(4,2)")).cast("decimal(4,2)") *
-          (lit(1) + col("l_tax").cast("decimal(4,2)")).cast("decimal(4,2)"), 4)
-          .cast("double").as("charged"),
-        col("l_quantity").cast("long").as("qty_int"))
-    },
+        |""".stripMargin),
 
     // ---- aggregation (TPC-H Q1 shape) ------------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_agg_pricing",
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2)                                        AS sum_qty,
@@ -84,90 +74,55 @@ object Relational {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02'
         |GROUP BY l_returnflag, l_linestatus
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          r2(sum("l_quantity")).as("sum_qty"),
-          r2(sum("l_extendedprice")).as("sum_base_price"),
-          r2(sum(col("l_extendedprice") * (lit(1) - col("l_discount")))).as("sum_disc_price"),
-          round(avg("l_quantity"), 4).as("avg_qty"),
-          round(avg("l_extendedprice"), 4).as("avg_price"),
-          round(avg("l_discount"), 4).as("avg_disc"),
-          count(lit(1)).as("count_order"),
-          max("l_quantity").cast("double").as("max_qty"),
-          min("l_quantity").cast("double").as("min_qty"))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_count_distinct",
       """SELECT o_orderstatus,
         |  count(DISTINCT o_custkey) AS n_cust,
         |  count(*) AS n_orders
         |FROM orders GROUP BY o_orderstatus
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").groupBy("o_orderstatus")
-        .agg(countDistinct(col("o_custkey")).as("n_cust"),
-          count(lit(1)).as("n_orders"))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_having",
       """SELECT o_custkey, count(*) AS n, round(sum(o_totalprice), 2) AS spend
         |FROM orders GROUP BY o_custkey HAVING count(*) > 12
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").groupBy("o_custkey")
-        .agg(count(lit(1)).as("n"), r2(sum("o_totalprice")).as("spend"))
-        .filter(col("n") > 12)
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_distinct",
-      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem") { (s, dir) =>
-      t(s, dir, "lineitem").select("l_returnflag", "l_linestatus").distinct()
-    },
+      "SELECT DISTINCT l_returnflag, l_linestatus FROM lineitem"),
 
     // ---- grouping sets / rollup / cube -----------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_rollup",
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
         |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").rollup("l_returnflag", "l_linestatus")
-        .agg(r2(sum("l_quantity")).as("sum_qty"), count(lit(1)).as("n"))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_cube",
       """SELECT l_returnflag, l_linestatus,
         |  round(sum(l_extendedprice), 2) AS sum_price, count(*) AS n
         |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").cube("l_returnflag", "l_linestatus")
-        .agg(r2(sum("l_extendedprice")).as("sum_price"), count(lit(1)).as("n"))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_grouping_sets",
       """SELECT l_returnflag, l_linestatus, count(*) AS n
         |FROM lineitem
         |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        |""".stripMargin) { (s, dir) =>
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, count(*) AS n
-          |FROM lineitem
-          |GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // ---- joins -----------------------------------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_join_inner",
       // sum(double) is summation-order-dependent; summing exact DECIMAL
       // products makes per-group revenue identical across engines.
+      // Fact-fact equi-join: shuffles on orderkey; bucket both sides on
+      // orderkey at warehouse scale to eliminate the shuffle entirely.
       """SELECT o_orderkey, o_orderdate,
         |  CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2))
         |                 * CAST(1 - CAST(l_discount AS DECIMAL(4,2)) AS DECIMAL(4,2))), 2) AS DOUBLE) AS revenue,
@@ -175,18 +130,7 @@ object Relational {
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |WHERE o_orderstatus = 'F'
         |GROUP BY o_orderkey, o_orderdate
-        |""".stripMargin) { (s, dir) =>
-      // fact-fact equi-join: shuffles on orderkey; bucket both sides on
-      // orderkey at warehouse scale to eliminate the shuffle entirely.
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "orders").filter(col("o_orderstatus") === "F"),
-          col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderkey", "o_orderdate")
-        .agg(round(sum(col("l_extendedprice").cast("decimal(12,2)") *
-            (lit(1) - col("l_discount").cast("decimal(4,2)")).cast("decimal(4,2)")), 2)
-          .cast("double").as("revenue"),
-          count(lit(1)).as("n_lines"))
-    },
+        |""".stripMargin),
 
     QueryDef(
       "q_join_multiway",
@@ -251,27 +195,18 @@ object Relational {
           r2(coalesce(col("__s"), lit(0))).as("total_spend"))
     },
 
-    QueryDef(
+    QueryDef.sql(
       "q_join_full",
       """SELECT n_name, s_suppkey, s_name
         |FROM nation FULL OUTER JOIN supplier ON n_nationkey = s_nationkey
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "nation")
-        .join(t(s, dir, "supplier"), col("n_nationkey") === col("s_nationkey"), "full_outer")
-        .select("n_name", "s_suppkey", "s_name")
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_join_semi",
       """SELECT c_custkey, c_name FROM customer c
         |WHERE EXISTS (SELECT 1 FROM orders o
         |              WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 400000)
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer")
-        .join(t(s, dir, "orders").filter(col("o_totalprice") > 400000),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey", "c_name")
-    },
+        |""".stripMargin),
 
     QueryDef(
       "q_join_anti",
@@ -283,24 +218,16 @@ object Relational {
         .select("c_custkey", "c_name")
     },
 
-    QueryDef(
+    QueryDef.sql(
       "q_join_cross",
-      "SELECT r_name, n_name FROM region CROSS JOIN nation") { (s, dir) =>
-      t(s, dir, "region").crossJoin(t(s, dir, "nation")).select("r_name", "n_name")
-    },
+      "SELECT r_name, n_name FROM region CROSS JOIN nation"),
 
-    QueryDef(
+    // IN (subquery) plans as a broadcast left-semi join on the tiny dim.
+    QueryDef.sql(
       "q_subquery_in",
       """SELECT c_custkey, c_name FROM customer
         |WHERE c_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 2)
-        |""".stripMargin) { (s, dir) =>
-      // IN (subquery) ≡ broadcast left-semi join on the tiny dim.
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation").filter(col("n_regionkey") === 2)
-          .select("n_nationkey")),
-          col("c_nationkey") === col("n_nationkey"), "left_semi")
-        .select("c_custkey", "c_name")
-    },
+        |""".stripMargin),
 
     QueryDef(
       "q_subquery_scalar",
@@ -317,7 +244,7 @@ object Relational {
     },
 
     // ---- windows ---------------------------------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_window_rank",
       """SELECT s_nationkey, s_suppkey, s_name,
         |  CAST(row_number() OVER w AS BIGINT) AS rn,
@@ -326,18 +253,9 @@ object Relational {
         |  CAST(ntile(4)     OVER w AS BIGINT) AS quartile
         |FROM supplier
         |WINDOW w AS (PARTITION BY s_nationkey ORDER BY s_acctbal DESC, s_suppkey)
-        |""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy("s_nationkey")
-        .orderBy(col("s_acctbal").desc, col("s_suppkey"))
-      t(s, dir, "supplier").select(
-        col("s_nationkey"), col("s_suppkey"), col("s_name"),
-        row_number().over(w).cast("long").as("rn"),
-        rank().over(w).cast("long").as("rk"),
-        dense_rank().over(w).cast("long").as("drk"),
-        ntile(4).over(w).cast("long").as("quartile"))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_window_leadlag",
       """SELECT o_custkey, o_orderkey, o_totalprice,
         |  lag(o_totalprice)  OVER w AS prev_price,
@@ -345,16 +263,9 @@ object Relational {
         |  first_value(o_totalprice) OVER w AS first_price
         |FROM orders
         |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-        |""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy("o_custkey").orderBy(col("o_orderdate"), col("o_orderkey"))
-      t(s, dir, "orders").select(
-        col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        lag("o_totalprice", 1).over(w).as("prev_price"),
-        lead("o_totalprice", 1).over(w).as("next_price"),
-        first("o_totalprice").over(w).as("first_price"))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_window_frame",
       """SELECT l_suppkey, l_orderkey, l_linenumber,
         |  round(sum(l_quantity) OVER (PARTITION BY l_suppkey
@@ -364,70 +275,45 @@ object Relational {
         |    ORDER BY l_shipdate, l_orderkey, l_linenumber
         |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS avg_qty_4
         |FROM lineitem
-        |""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy("l_suppkey")
-        .orderBy(col("l_shipdate"), col("l_orderkey"), col("l_linenumber"))
-      t(s, dir, "lineitem").select(
-        col("l_suppkey"), col("l_orderkey"), col("l_linenumber"),
-        r2(sum("l_quantity").over(w.rowsBetween(Window.unboundedPreceding, 0)))
-          .as("running_qty"),
-        round(avg("l_quantity").over(w.rowsBetween(-3, 0)), 4).as("avg_qty_4"))
-    },
+        |""".stripMargin),
 
     // ---- sort / top-k ----------------------------------------------
-    QueryDef(
+    // ORDER BY + LIMIT plans TakeOrderedAndProject: per-partition
+    // top-k then a k-row merge on the driver — no global sort.
+    QueryDef.sql(
       "q_topk",
       """SELECT o_orderkey, o_totalprice FROM orders
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20
-        |""".stripMargin) { (s, dir) =>
-      // orderBy+limit → TakeOrderedAndProject: per-partition top-k then
-      // a k-row merge on the driver — no global sort at any scale.
-      t(s, dir, "orders").select("o_orderkey", "o_totalprice")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey")).limit(20)
-    },
+        |""".stripMargin),
 
     // ---- set operations --------------------------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_union_all",
       """SELECT c_custkey AS key, 'customer' AS src FROM customer
         |UNION ALL
         |SELECT s_suppkey AS key, 'supplier' AS src FROM supplier
-        |""".stripMargin) { (s, dir) =>
-      val c = t(s, dir, "customer").select(col("c_custkey").as("key"), lit("customer").as("src"))
-      val sup = t(s, dir, "supplier").select(col("s_suppkey").as("key"), lit("supplier").as("src"))
-      c.unionByName(sup)
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_union_distinct",
       """SELECT c_nationkey AS nk FROM customer
         |UNION
         |SELECT s_nationkey AS nk FROM supplier
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey").as("nk"))
-        .unionByName(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
-        .distinct()
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_intersect",
       """SELECT c_nationkey AS nk FROM customer
         |INTERSECT
         |SELECT s_nationkey AS nk FROM supplier
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey").as("nk"))
-        .intersect(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
-    },
+        |""".stripMargin),
 
-    QueryDef(
+    QueryDef.sql(
       "q_except",
       """SELECT c_nationkey AS nk FROM customer
         |EXCEPT
         |SELECT s_nationkey AS nk FROM supplier
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "customer").select(col("c_nationkey").as("nk"))
-        .except(t(s, dir, "supplier").select(col("s_nationkey").as("nk")))
-    },
+        |""".stripMargin),
 
     // ---- scalar functions ------------------------------------------
     QueryDef(
@@ -480,7 +366,7 @@ object Relational {
         (col("o_orderdate") + expr("INTERVAL 30 DAY")).as("due_ts"))
     },
 
-    QueryDef(
+    QueryDef.sql(
       "q_math_funcs",
       """SELECT l_orderkey, l_linenumber,
         |  round(abs(l_discount - 0.05), 4)      AS abs_disc,
@@ -491,17 +377,7 @@ object Relational {
         |  round(sqrt(l_quantity), 6)            AS qty_sqrt,
         |  l_orderkey % 7                        AS key_mod
         |FROM lineitem
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").select(
-        col("l_orderkey"), col("l_linenumber"),
-        round(abs(col("l_discount") - 0.05), 4).as("abs_disc"),
-        ceil(col("l_quantity")).cast("long").as("qty_ceil"),
-        floor(col("l_quantity")).cast("long").as("qty_floor"),
-        round(log(col("l_extendedprice")), 6).as("log_price"),
-        round(pow(col("l_discount"), 2), 6).as("disc_sq"),
-        round(sqrt(col("l_quantity")), 6).as("qty_sqrt"),
-        (col("l_orderkey") % 7).as("key_mod"))
-    },
+        |""".stripMargin),
 
     QueryDef(
       "q_case_predicates",
@@ -571,18 +447,12 @@ object Relational {
     },
 
     // ---- events / time-series shapes -------------------------------
-    QueryDef(
+    QueryDef.sql(
       "q_events_sessionize",
       """SELECT user_id, CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
         |  count(*) AS n_events,
         |  round(sum(value), 2) AS sum_value,
         |  count(DISTINCT event_type) AS n_types
         |FROM events GROUP BY 1, 2
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "events")
-        .groupBy(col("user_id"), date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n_events"),
-          r2(sum("value")).as("sum_value"),
-          countDistinct(col("event_type")).as("n_types"))
-    })
+        |""".stripMargin))
 }

