@@ -35,7 +35,8 @@ object Verify {
     }
     // Extra session conf for experiments, same contract as Bench
     // ("k=v;k=v") — how the arm-forced oracle runs (e.g.
-    // graft.ppjoin.mode=length) reach the operators under Verify.
+    // graft.window.singleTaskLimitBytes=0 for the distributed window
+    // arms) reach the operators under Verify.
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains('='))
       .foreach { kv => val Array(k, v) = kv.split("=", 2); builder.config(k, v) })
     val spark = builder.getOrCreate()

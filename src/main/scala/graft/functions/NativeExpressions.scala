@@ -2140,44 +2140,12 @@ object NativeExpressions {
     ExpressionUtils.column(RepetitionStats(ExpressionUtils.expression(tokens)))
   def bloom_might_contain(hash: Column, bits: Array[Long], numHashes: Int): Column =
     ExpressionUtils.column(BloomMightContain(ExpressionUtils.expression(hash), bits, numHashes))
-
-  /** Register every graft function for SQL passthrough use
-    * (`SELECT cosine_sim(a, b) FROM ...`). For cluster deployments the
-    * same registrations ride a SparkSessionExtensions (GraftExtensions). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("cosine_sim",
-      es => CosineSimilarity(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_product",
-      es => DotProduct(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_signature",
-      es => MinHashSignature(es.head, 128, 42L), "scala_udf")
-    reg.createOrReplaceTempFunction("signature_agreement",
-      es => SignatureAgreement(es.head, es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("snowflake_id",
-      _ => SnowflakeId(Snowflake.defaultNodeId), "scala_udf")
-    reg.createOrReplaceTempFunction("rolling_fingerprint",
-      es => RollingFingerprint(es.head, 16), "scala_udf")
-    reg.createOrReplaceTempFunction("word_shingles",
-      es => WordShingles(es.head, 5), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_from_tokens",
-      es => MinHashFromTokens(es.head, 5, 128, 42L, useMd5 = false), "scala_udf")
-    reg.createOrReplaceTempFunction("oneperm_minhash",
-      es => OnePermMinHash(es.head, 5, 128, 42L, useMd5 = false), "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_buckets",
-      es => HyperplaneBuckets(es.head, 64, 8, 4, 42), "scala_udf")
-    reg.createOrReplaceTempFunction("pii_scan",
-      es => PiiScan(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("repetition_stats",
-      es => RepetitionStats(es.head), "scala_udf")
-  }
 }
 
-/** SparkSessionExtensions hook: `--conf spark.sql.extensions=
-  * graft.functions.GraftExtensions` registers the native functions in
-  * every session of a cluster deployment. */
+/** The one registration of graft's functions for SQL use (`SELECT
+  * cosine_sim(a, b) FROM ...`): `--conf spark.sql.extensions=
+  * graft.functions.GraftExtensions`, or `withExtensions` on a session
+  * builder, injects them into every session built with it. */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -2190,6 +2158,8 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       es => DotProduct(es.head, es(1))))
     e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
       es => SimHash64(es.head)))
+    e.injectFunction((FunctionIdentifier("minhash_signature"), info("minhash_signature"),
+      es => MinHashSignature(es.head, 128, 42L)))
     e.injectFunction((FunctionIdentifier("signature_agreement"), info("signature_agreement"),
       es => SignatureAgreement(es.head, es(1))))
     e.injectFunction((FunctionIdentifier("snowflake_id"), info("snowflake_id"),

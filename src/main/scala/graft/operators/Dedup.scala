@@ -744,7 +744,7 @@ object Dedup {
   private val PrefixFilterMinThreshold = 0.1
 
   /** Memoized PPJoin arm decisions, keyed on (input files, params) —
-    * see the "auto" branch in [[prefixFilteredIntersections]].
+    * see the containment arm selection in [[prefixFilteredIntersections]].
     * Warehouse parquet is immutable (staged rename-publish), so a
     * dataset's density probe is a pay-once catalog statistic. Bounded
     * LRU (access-order LinkedHashMap, capacity [[PpjoinMemoCapacity]]):
@@ -857,20 +857,20 @@ object Dedup {
       .select(col("doc"), col("set_size"), col("__rare"),
         posexplode(slice(col("__pref"), lit(1), col("__plen").cast("int"))))
       .withColumnRenamed("pos", "__i").withColumnRenamed("col", "s")
-    // graft.ppjoin.mode — arm selection (all modes are output-identical;
-    // the filters only prune candidates exact verification would reject
-    // anyway):
-    //   "auto"   — (default) pick from the data, see below
+    // Arm selection (both arms are output-identical; the filters only
+    // prune candidates exact verification would reject anyway):
     //   "full"   — length + positional filters
     //   "length" — length filter only, plain candidate dedup
-    //   "off"    — the pre-r11 prefix-only plan
-    // The r11 A/B showed the static "full" default is wrong for
-    // low-dup-density corpora: on the sf10 hard corpus (99 near-dup
+    // The length filter always runs: the pre-r11 prefix-only plan lost
+    // to it at sf10 on both queries (BENCH_LOCAL.md, "PPJoin positional
+    // + length filters"). The r11 A/B showed a static "full" is wrong
+    // for low-dup-density corpora: on the sf10 hard corpus (99 near-dup
     // siblings/doc) the positional filter cuts containment CPU −39%
-    // (1774→1082 CPU-s), but at sf1 it INVERTS (49.7 full vs 27.9 off)
-    // — the min-aggregate's wide shuffle rows cost more than the
-    // pruning saves when few candidates exist per doc. "auto" estimates
-    // the pre-filter candidate volume with a one-aggregate probe:
+    // (1774→1082 CPU-s), but at sf1 it INVERTS (49.7 full vs 27.9
+    // prefix-only) — the min-aggregate's wide shuffle rows cost more
+    // than the pruning saves when few candidates exist per doc.
+    // Containment therefore estimates the pre-filter candidate volume
+    // with a one-aggregate probe:
     // Σ over prefix occurrences (doc, s) of df(s) = Σ_s
     // prefixCnt(s)·df(s) — EXACTLY the number of (probe-prefix ×
     // index) join matches the candidate join would emit before any
@@ -894,11 +894,8 @@ object Dedup {
     // it won the A/B at every measured scale (both prefixes are
     // threshold-shortened, so the positional aggregate is far narrower
     // than containment's full-rare-list index side).
-    val modeConf = GraftConf.choice(df.sparkSession, "graft.ppjoin.mode", "auto",
-      Seq("auto", "full", "length", "off"))
     val mode =
-      if (modeConf != "auto") modeConf
-      else if (!containment) "full"
+      if (!containment) "full"
       else {
         val cacheKey = {
           val files = df.inputFiles
@@ -922,16 +919,15 @@ object Dedup {
         }
       }
     val positional = mode == "full"
-    val lengthF = mode != "off"
     val cand =
       if (!containment) {
         val a = prefixes.select(col("s"), col("doc").as("doc_a"),
           col("set_size").as("__fa"), col("__rare").as("__ra"), col("__i").as("__ia"))
         val b = prefixes.select(col("s"), col("doc").as("doc_b"),
           col("set_size").as("__fb"), col("__rare").as("__rb"), col("__i").as("__ib"))
-        val joined0 = a.join(b, "s").filter(col("doc_a") < col("doc_b"))
-        val joined = if (lengthF) joined0.filter(least(col("__ra"), col("__rb")) >=
-          lit(threshold / (1.0 + threshold)) * (col("__fa") + col("__fb"))) else joined0
+        val joined = a.join(b, "s").filter(col("doc_a") < col("doc_b"))
+          .filter(least(col("__ra"), col("__rb")) >=
+            lit(threshold / (1.0 + threshold)) * (col("__fa") + col("__fb")))
         if (positional)
           joined.groupBy("doc_a", "doc_b", "__fa", "__fb", "__ra", "__rb")
             .agg(min(col("__ia")).as("__ia"), min(col("__ib")).as("__ib"))
@@ -950,11 +946,10 @@ object Dedup {
           .select(col("doc").as("__id"), col("set_size").as("__is"),
             col("__rare").as("__ir"), posexplode(col("__pref")))
           .withColumnRenamed("pos", "__qi").withColumnRenamed("col", "s")
-        val joined0 = p.join(i, "s")
+        val joined = p.join(i, "s")
           .filter(col("__ps") < col("__is") ||
             (col("__ps") === col("__is") && col("__pd") < col("__id")))
-        val joined = if (lengthF) joined0.filter(
-          least(col("__pr"), col("__ir")) >= lit(threshold) * col("__ps")) else joined0
+          .filter(least(col("__pr"), col("__ir")) >= lit(threshold) * col("__ps"))
         if (positional)
           joined.groupBy("__pd", "__id", "__ps", "__pr", "__ir")
             .agg(min(col("__pi")).as("__pi"), min(col("__qi")).as("__qi"))

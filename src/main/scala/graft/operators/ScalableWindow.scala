@@ -246,10 +246,7 @@ object ScalableWindow {
     import org.apache.spark.sql.expressions.Window
     val base = lineitem.select(
       "l_returnflag", "l_quantity", "l_orderkey", "l_linenumber")
-    // Threshold overridable for measurement (A/B at any SF without a
-    // recompile).
-    if (GraftConf.fitsIn(base, GraftConf.bytes(lineitem.sparkSession,
-        "graft.window.analyticSortLimitBytes", singleTaskSortLimitBytes))) {
+    if (GraftConf.fitsIn(base, singleTaskSortLimitBytes)) {
       val order = Seq(col("l_quantity"), col("l_orderkey"), col("l_linenumber"))
       val w = Window.partitionBy("l_returnflag").orderBy(order: _*)
       val wRun = w.rowsBetween(Window.unboundedPreceding, 0)

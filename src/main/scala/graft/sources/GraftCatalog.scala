@@ -43,25 +43,22 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
   *    the single `gen.json` object to name it — one atomic PUT. There
   *    is NO window where the table resolves to a missing or
   *    half-renamed directory (the rounds-≤13 rename-swap had one).
-  *    Old generations are deleted after the flip (readers mid-scan on
-  *    a pre-flip plan can race that delete — same caveat as every
-  *    non-snapshot warehouse; set `graft.warehouse.keepOldGen=true`
-  *    to retain the previous generation until the next rewrite).
+  *    The old generation is deleted after the flip (readers mid-scan
+  *    on a pre-flip plan can race that delete — same caveat as every
+  *    non-snapshot warehouse).
   *  - '''Appends publish per-file + a commit marker''': each staged
   *    part file appears atomically under its final
   *    `<key>-<n>.parquet` name (single-object rename on HDFS/file://,
   *    copy+PUT on S3 — either way per-FILE atomic), then one
   *    `commits/<key>.json` marker (atomic PUT) commits the batch as a
-  *    whole. A default `read` scans the directory — a reader racing a
-  *    multi-file publish can see a batch PREFIX (the reference's
-  *    backends are equally non-transactional per batch). Readers that
-  *    need batch-atomic visibility set
-  *    `graft.warehouse.strictCommits=true`: `read` then lists the data
-  *    files and keeps only (a) rewrite output (`part-*`, committed
+  *    whole. Every [[read]] is batch-atomic: it lists the data files
+  *    and keeps only (a) rewrite output (`part-*`, committed
   *    atomically by the generation flip) and (b) append files whose
-  *    key has a published marker — a crash between file publish and
-  *    marker PUT leaves the partial batch invisible until the queue
-  *    redelivers and the idempotent republish completes it.
+  *    key has a published marker. A crash between file publish and
+  *    marker PUT leaves the partial batch invisible — to queries and
+  *    to the [[compact]]/[[cluster]] rewrites, which read through
+  *    [[read]] — until the queue redelivers and the idempotent
+  *    republish completes it; a dead-lettered batch stays invisible.
   *
   * Scale: a table is a plain parquet dir — at warehouse scale the same
   * layout partitions/buckets by any column via `df.write.partitionBy`;
@@ -305,7 +302,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     val have = readSchemaSeq(db, table).map(_._1).toSet
     require(cols.forall(have.contains),
       s"partition columns must exist in schema: ${cols.filterNot(have.contains)}")
-    require(!hasData(db, table), "cannot re-partition a non-empty table")
+    require(parquetFiles(dataDir(db, table)).isEmpty, "cannot re-partition a non-empty table")
     writeString(partitionFile(db, table), cols.map(quote).mkString("[", ",", "]"))
   }
 
@@ -410,20 +407,16 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
 
   /** The convention the table's stored index was BUILT under —
     * persisted in `dedup_index/params.json` when the index is first
-    * written and required to match the policy at every probe. Indexes
-    * predating the sidecar could only have been built with the
-    * defaults (nothing else was ever forwarded), so absence reads as
-    * [[GraftCatalog.DedupParams]] defaults. */
+    * written and required to match the policy at every probe. None
+    * when the index has no sidecar yet. */
   def storedIndexParams(db: String, table: String): Option[GraftCatalog.DedupParams] = {
     import graft.functions.JValue, graft.functions.JValue._
     val f = new HPath(dedupIndexDir(db, table), "params.json")
-    if (exists(f)) readJson(f) match {
+    if (!exists(f)) None
+    else readJson(f) match {
       case o: JObj => Some(GraftCatalog.DedupParams.fromJson(o))
       case other => throw new IllegalStateException(s"bad index params sidecar: $other")
     }
-    else if (exists(new HPath(dedupIndexDir(db, table), "bands")))
-      Some(GraftCatalog.DedupParams()) // legacy index: defaults by construction
-    else None
   }
 
   /** Append via a per-call staging directory + rename publish.
@@ -495,7 +488,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * deterministic `<key>-<n>.parquet` names (each move is per-FILE
     * atomic: rename on HDFS/file://, copy+PUT on object stores), and
     * the batch COMMITS with one atomic marker write. Crash anywhere
-    * before the marker → strict readers never saw the batch and the
+    * before the marker → readers never saw the batch and the
     * redelivered job republishes from scratch. Returns the batch's
     * footer row count, None when the footers could not be read. */
   private def publishStage(stage: HPath, data: HPath, db: String,
@@ -547,9 +540,6 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     footers.map(_._1)
   }
 
-  private def hasData(db: String, table: String): Boolean =
-    parquetFiles(dataDir(db, table)).nonEmpty
-
   // ---- measured table statistics -----------------------------------
   //
   // A parquet scan's planner estimate is the COMPRESSED file size —
@@ -598,39 +588,32 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * base totals. The read verifies the stored ksum against the LIVE
     * committed-key set (O(1) via the mtime-cached [[committedKeys]]);
     * a mismatch — another driver published, a lost RMW increment, a
-    * crash between marker and stats — triggers a recompute from the
-    * markers' own per-batch (rows, bytes) ledger and a heal-write.
-    * The only surviving skew is a pre-r16 legacy stats file (no ksum
-    * to verify, served as-is) and pre-r15 markers without (rows,
-    * bytes) fields (undercount → at worst an over-broadcast-AVOIDING
-    * error); both heal permanently at the next rewrite. */
+    * crash between marker and stats, a file without a ksum — triggers
+    * a recompute from the markers' own per-batch (rows, bytes) ledger
+    * and a heal-write. */
   def tableStats(db: String, table: String): Option[(Long, Long)] =
-    tableStats(db, table, None)
+    tableStats(db, table, committedKeys(db, table))
 
-  /** `knownKeys`: a committed-key set the caller just listed (strict
-    * reads), saving the verification pass its own LIST. */
+  /** `keys`: the committed-key set the totals must cover — the one the
+    * caller's read just listed. */
   private def tableStats(db: String, table: String,
-                         knownKeys: Option[Set[String]]): Option[(Long, Long)] =
-    readStatsFile(db, table).map {
-      case (rows, bytes, _, _, None) => (rows, bytes) // legacy, unverifiable
-      case (rows, bytes, baseR, baseB, Some(ks)) =>
-        val keys = knownKeys.getOrElse(committedKeys(db, table))
-        if (ks == ksumOf(keys)) (rows, bytes)
-        else {
-          val (mr, mb) = sumMarkers(db, table, keys)
-          val healed = (math.max(0L, baseR + mr), math.max(0L, baseB + mb))
-          try writeStats(db, table, healed._1, healed._2, baseR, baseB,
-            Some(ksumOf(keys)))
-          catch { case _: Exception => () } // advisory — serve it anyway
-          healed
-        }
+                         keys: Set[String]): Option[(Long, Long)] =
+    readStatsFile(db, table).map { case (rows, bytes, baseR, baseB, ks) =>
+      if (ks.contains(ksumOf(keys))) (rows, bytes)
+      else {
+        val (mr, mb) = sumMarkers(db, table, keys)
+        val healed = (math.max(0L, baseR + mr), math.max(0L, baseB + mb))
+        try writeStats(db, table, healed._1, healed._2, baseR, baseB, ksumOf(keys))
+        catch { case _: Exception => () } // advisory — serve it anyway
+        healed
+      }
     }
 
   /** Raw stats sidecar: (rows, bytes, baseRows, baseBytes, ksum).
     * `base*` are the last rewrite's footer totals — the contribution
     * NOT represented by any commit marker; `ksum` is the XOR of
-    * [[keyHash]] over the marker keys the totals cover (absent in
-    * pre-r16 files). */
+    * [[keyHash]] over the marker keys the totals cover (None when the
+    * file has none, which verifies against no key set). */
   private def readStatsFile(db: String, table: String)
       : Option[(Long, Long, Long, Long, Option[Long])] = {
     import graft.functions.JValue._
@@ -647,13 +630,11 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   }
 
   private def writeStats(db: String, table: String, rows: Long, bytes: Long,
-                         baseRows: Long, baseBytes: Long,
-                         ksum: Option[Long]): Unit = {
-    val tail = ksum.map(k =>
-      s""","base_rows":${math.max(0L, baseRows)},"base_bytes":${math.max(0L, baseBytes)},"ksum":"${java.lang.Long.toHexString(k)}"""").getOrElse("")
+                         baseRows: Long, baseBytes: Long, ksum: Long): Unit =
     writeString(statsFile(db, table),
-      s"""{"rows":${math.max(0L, rows)},"bytes":${math.max(0L, bytes)}$tail}""")
-  }
+      s"""{"rows":${math.max(0L, rows)},"bytes":${math.max(0L, bytes)},""" +
+        s""""base_rows":${math.max(0L, baseRows)},"base_bytes":${math.max(0L, baseBytes)},""" +
+        s""""ksum":"${java.lang.Long.toHexString(ksum)}"}""")
 
   /** FNV-1a 64 over the key string — stable across JVMs (stats files
     * outlive drivers), unlike String.hashCode's 32 bits. */
@@ -692,11 +673,12 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * file covered exactly the pre-publish key set (ksum check) and
     * this is not a same-key retry, increment. Anything else — another
     * driver's marker landed, a retry replaced a key's contribution, a
-    * legacy/missing file — recomputes from the marker ledger, which
-    * by construction includes every concurrent publisher's committed
-    * batch. Two drivers racing this write can still last-writer-win a
-    * stale VALUE, but never a stale value with a CURRENT ksum, so the
-    * next [[tableStats]] read detects and heals it. */
+    * missing file or one without a ksum — recomputes from the marker
+    * ledger, which by construction includes every concurrent
+    * publisher's committed batch. Two drivers racing this write can
+    * still last-writer-win a stale VALUE, but never a stale value with
+    * a CURRENT ksum, so the next [[tableStats]] read detects and heals
+    * it. */
   private def updateStatsAfterPublish(db: String, table: String, key: String,
                                       bRows: Long, bBytes: Long,
                                       isRetry: Boolean): Unit = {
@@ -704,20 +686,16 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     readStatsFile(db, table) match {
       case Some((r, b, baseR, baseB, Some(ks)))
           if !isRetry && ks == (ksumOf(keys) ^ keyHash(key)) =>
-        writeStats(db, table, r + bRows, b + bBytes, baseR, baseB, Some(ksumOf(keys)))
-      case Some((r, b, _, _, None)) =>
-        // legacy pre-r16 file: base unknowable, keep incrementing
-        // unverified until the next rewrite installs a clean v2 base
-        writeStats(db, table, r + bRows, b + bBytes, 0L, 0L, None)
+        writeStats(db, table, r + bRows, b + bBytes, baseR, baseB, ksumOf(keys))
       case other =>
         val (baseR, baseB) = other.map(t => (t._3, t._4)).getOrElse((0L, 0L))
         val (mr, mb) = sumMarkers(db, table, keys)
-        writeStats(db, table, baseR + mr, baseB + mb, baseR, baseB, Some(ksumOf(keys)))
+        writeStats(db, table, baseR + mr, baseB + mb, baseR, baseB, ksumOf(keys))
     }
   }
 
-  /** Committed-key cache for strict reads: (dir mtime, time the list
-    * ran, keys). A strict `read` at 10⁵ accumulated batches would
+  /** Committed-key cache for reads: (dir mtime, time the list ran,
+    * keys). A `read` at 10⁵ accumulated batches would
     * otherwise pay a full LIST of `commits/` per query — on an object
     * store that is the read path's dominant metadata cost. One
     * `getFileStatus` mtime probe replaces the LIST when nothing
@@ -761,53 +739,45 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     keys
   }
 
-  private def strictCommits: Boolean =
-    GraftConf.bool(spark, "graft.warehouse.strictCommits", false)
-
   /** Read the table under its full sidecar schema (partition columns
-    * resolve from the directory layout by name).
-    *
-    * Default: scan the current data generation — cheapest plan, but a
-    * reader racing a multi-file append can see a batch prefix. With
-    * `graft.warehouse.strictCommits=true` the read is batch-atomic:
-    * rewrite output (`part-*`, committed wholesale by the generation
-    * flip) plus only marker-committed append batches. */
-  def read(db: String, table: String): DataFrame = {
+    * resolve from the directory layout by name). Batch-atomic: rewrite
+    * output (`part-*`, committed wholesale by the generation flip) plus
+    * only marker-committed append batches (class doc). */
+  def read(db: String, table: String): DataFrame = read(db, table, snapshot(db, table))
+
+  private def read(db: String, table: String, snap: GraftCatalog.Snapshot): DataFrame = {
     val struct = structOf(db, table)
-    val data = dataDir(db, table)
-    val strict = strictCommits
-    var strictKeys: Option[Set[String]] = None
-    val files =
-      if (!strict) if (hasData(db, table)) Seq(data.toString) else Nil
-      else {
-        val committed = committedKeys(db, table)
-        strictKeys = Some(committed)
-        // append batches publish as <32-hex-key>-<n>.parquet; anything
-        // else in the generation came from a rewrite job and was
-        // committed atomically by the gen.json flip
-        val KeyedName = "([0-9a-f]{32})-\\d+\\.parquet".r
-        parquetFiles(data).filter { p =>
-          p.getName match {
-            case KeyedName(k) => committed.contains(k)
-            case _ => true
-          }
-        }.map(_.toString)
-      }
-    if (files.isEmpty)
+    if (snap.files.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], struct)
     else {
-      val df = spark.read.schema(struct).option("basePath", data.toString)
-        .parquet(files: _*)
+      val df = spark.read.schema(struct).option("basePath", snap.data.toString)
+        .parquet(snap.files.map(_.getPath.toString): _*)
       // install measured statistics (decoded bytes + row count from the
       // publish-time footers) so size-based planning — broadcast above
       // all — decides on true bytes, not the compressed file size
-      tableStats(db, table, strictKeys) match {
+      tableStats(db, table, snap.committed) match {
         case Some((rows, bytes)) if bytes > 0 =>
           scala.util.Try(org.apache.spark.sql.graft.Bridge.withTableStats(
             df, db, table, BigInt(bytes), Some(BigInt(rows)))).getOrElse(df)
         case _ => df
       }
     }
+  }
+
+  /** One listing of what a [[read]] scans: the current generation, its
+    * committed keys, and the generation's files less the append files
+    * whose batch has no marker. Append batches publish as
+    * `<32-hex-key>-<n>.parquet`; anything else in the generation came
+    * from a rewrite job and was committed by the `gen.json` flip. */
+  private def snapshot(db: String, table: String): GraftCatalog.Snapshot = {
+    val data = dataDir(db, table)
+    val committed = committedKeys(db, table)
+    GraftCatalog.Snapshot(data, committed, parquetStatuses(data).filter { st =>
+      st.getPath.getName match {
+        case GraftCatalog.KeyedName(k) => committed.contains(k)
+        case _ => true
+      }
+    })
   }
 
   /** Small-file compaction (maintenance op). The rotation-based ingest
@@ -876,12 +846,13 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       val cd = commitsDir(db, table)
       if (fs.exists(cd)) fs.listStatus(cd).foreach(st => fs.delete(st.getPath, false))
       committedCache.remove(db + "/" + table)
-      if (!GraftConf.bool(spark, "graft.warehouse.keepOldGen", false)) fs.delete(cur, true)
-      // older grace generations from previous keepOldGen runs
+      fs.delete(cur, true)
+      // any other generation dir is left over from a rewrite that died
+      // after its flip but before this delete, and no reader resolves it
       val GenName = "data(-\\d+)?".r
       fs.listStatus(tdir).foreach { st =>
         val n = st.getPath.getName
-        if (st.isDirectory && GenName.matches(n) && n != nextName && n != cur.getName)
+        if (st.isDirectory && GenName.matches(n) && n != nextName)
           fs.delete(st.getPath, true)
       }
       val nextFiles = parquetFiles(next)
@@ -890,7 +861,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       // markers were just cleared → the new base covers everything and
       // the covered-key fingerprint is the empty set's (0)
       try { val (r, b) = footerStats(nextFiles)
-            writeStats(db, table, r, b, r, b, Some(0L)) }
+            writeStats(db, table, r, b, r, b, 0L) }
       catch { case _: Exception => () } // advisory
       (parts.length, nextFiles.length)
     }
@@ -1064,13 +1035,14 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       survivors, idCol, policy.textCol,
       shingleK = pr.shingleK, numHashes = pr.numHashes, bands = pr.bands,
       seed = pr.seed, useMd5 = pr.useMd5, oph = pr.oph)
-    survivorIndex.bands.write.mode("append").parquet(bandsPath.toString)
-    survivorIndex.sigs.write.mode("append").parquet(sigsPath.toString)
-    // record the convention the index is built under, once, so every
-    // future probe (and setDedupPolicy) can verify against it
+    // record the convention the index is built under before its first
+    // rows land, so every future probe (and setDedupPolicy) can verify
+    // against it
     val paramsFile = new HPath(dir, "params.json")
     if (!exists(paramsFile))
       writeString(paramsFile, "{" + pr.json + "}")
+    survivorIndex.bands.write.mode("append").parquet(bandsPath.toString)
+    survivorIndex.sigs.write.mode("append").parquet(sigsPath.toString)
     appended
   }
 
@@ -1220,13 +1192,17 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     (before, after)
   }
 
-  private def viewStamp(db: String, table: String): GraftCatalog.ViewStamp = {
+  /** The table's stamp and the snapshot it pins. The sidecars are read
+    * before the listing, so a change racing either only costs one more
+    * rebuild. */
+  private def viewStamp(db: String, table: String)
+      : (GraftCatalog.ViewStamp, GraftCatalog.Snapshot) = {
     def text(p: HPath) = if (exists(p)) Some(readString(p)) else None
-    GraftCatalog.ViewStamp(db,
-      Seq(schemaFile _, genFile _, partitionFile _, statsFile _).map(f => text(f(db, table))),
-      strictCommits, committedKeys(db, table),
-      parquetStatuses(dataDir(db, table)).map(st =>
-        (st.getPath.toString, st.getLen, st.getModificationTime)))
+    val sidecars =
+      Seq(schemaFile _, genFile _, partitionFile _, statsFile _).map(f => text(f(db, table)))
+    val snap = snapshot(db, table)
+    (GraftCatalog.ViewStamp(db, sidecars, snap.committed, snap.files.map(st =>
+      (st.getPath.toString, st.getLen, st.getModificationTime))), snap)
   }
 
   /** View name → (stamp it was built under, the session's view object
@@ -1238,17 +1214,16 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * A table's view is rebuilt only when its [[GraftCatalog.ViewStamp]]
     * changed, or when the session's view is no longer the one
     * registered here (an admin's `CREATE OR REPLACE TEMP VIEW`, a `DROP
-    * VIEW`, another catalog on the same session). The stamp is taken
-    * BEFORE the read, so a change racing the read only costs one more
-    * rebuild. */
+    * VIEW`, another catalog on the same session). A rebuilt view reads
+    * exactly the files its stamp listed. */
   def registerViews(db: String): Unit = registered.synchronized {
     val views = spark.sessionState.catalog
     listTables(db).foreach { t =>
-      val stamp = viewStamp(db, t)
+      val (stamp, snap) = viewStamp(db, t)
       val current = registered.get(t).exists { case (s, view) =>
         s == stamp && views.getRawTempView(t).exists(_ eq view) }
       if (!current) {
-        read(db, t).createOrReplaceTempView(t)
+        read(db, t, snap).createOrReplaceTempView(t)
         views.getRawTempView(t).foreach(v => registered(t) = (stamp, v))
       }
     }
@@ -1288,15 +1263,22 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
 }
 
 object GraftCatalog {
+  /** An append batch's published file name: `<32-hex-key>-<n>.parquet`. */
+  private val KeyedName = "([0-9a-f]{32})-\\d+\\.parquet".r
+
+  /** What one [[GraftCatalog.read]] scans: the data generation, the
+    * committed keys listed with it, and the files it keeps. */
+  private final case class Snapshot(data: HPath,
+                                    committed: Set[String], files: Seq[FileStatus])
+
   /** Everything [[GraftCatalog.read]] of one table depends on: its
     * sidecars (schema, generation pointer, partitioning, stats), the
-    * strict-commits setting, the committed keys and the current
-    * generation's file listing. Published files are never rewritten in
-    * place (a retry republishes under a fresh mtime), so (path, length,
-    * mtime) pins the listing. Equal stamps mean a fresh `read` would
-    * build the same DataFrame. */
+    * committed keys and the files the read keeps. Published files are
+    * never rewritten in place (a retry republishes under a fresh
+    * mtime), so (path, length, mtime) pins the listing. Equal stamps
+    * mean a fresh `read` would build the same DataFrame. */
   private final case class ViewStamp(db: String, sidecars: Seq[Option[String]],
-                                     strict: Boolean, committed: Set[String],
+                                     committed: Set[String],
                                      files: Seq[(String, Long, Long)])
 
   /** The signature CONVENTION of a minhash dedup index — everything

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.col
   * `gs://` root takes (FS resolved from the root's scheme, every byte
   * of catalog I/O through the Hadoop API; a java.nio catalog would
   * throw on the scheme'd root at the first sidecar write). Covers:
-  * ingest → marker-committed publish → read (default + strictCommits)
+  * ingest → marker-committed publish → batch-atomic read
   * → generation-pointer compact → post-compact append → cluster. */
 class GraftCatalogFsSpec extends SparkTestBase {
   import spark.implicits._
@@ -90,17 +90,12 @@ class GraftCatalogFsSpec extends SparkTestBase {
     fs.copyFromLocalFile(new HPath(src.toString),
       new HPath(root + s"/db/t/data/$orphanKey-0.parquet"))
 
-    val relaxed = cat.read("db", "t").count()
-    assert(relaxed == 2, "default read scans the directory (sees the orphan)")
-    spark.conf.set("graft.warehouse.strictCommits", "true")
-    try {
-      assert(cat.read("db", "t").count() == 1,
-        "strict read must hide the marker-less batch")
-      // completing the publish (marker appears) makes it visible
-      cat.append("db", "t", Seq((2L, 20L)).toDF("__row_id", "k"),
-        jobKey = Some("second"))
-      assert(cat.read("db", "t").count() == 2)
-    } finally spark.conf.unset("graft.warehouse.strictCommits")
+    assert(cat.read("db", "t").count() == 1,
+      "a read must hide the marker-less batch")
+    // completing the publish (marker appears) makes it visible
+    cat.append("db", "t", Seq((2L, 20L)).toDF("__row_id", "k"),
+      jobKey = Some("second"))
+    assert(cat.read("db", "t").count() == 2)
   }
 
   test("hive-partitioned table on file:// root: partition prune + compact preserves layout") {

@@ -72,10 +72,8 @@ class PublishChaosSpec extends SparkTestBase {
     assert(markers.length == 1)
     fs.delete(markers.head, false)
     assert(catalog.committedKeys("db", "t").isEmpty)
-    spark.conf.set("graft.warehouse.strictCommits", "true")
-    try assert(rows(catalog) == 0,
-      "strict readers never see a batch whose marker is missing")
-    finally spark.conf.unset("graft.warehouse.strictCommits")
+    assert(rows(catalog) == 0,
+      "readers never see a batch whose marker is missing")
 
     // crash point B (earlier still): also lose one published file —
     // the partial-batch state a mid-publish kill leaves
@@ -90,9 +88,7 @@ class PublishChaosSpec extends SparkTestBase {
     loader.loadFile("db", "t", file, Some("q7"))
     assert(rows(catalog) == 50, "retry converges to exactly one copy")
     assert(catalog.committedKeys("db", "t").size == 1)
-    spark.conf.set("graft.warehouse.strictCommits", "true")
-    try assert(rows(catalog) == 50, "the completed publish is marker-committed")
-    finally spark.conf.unset("graft.warehouse.strictCommits")
+    assert(rows(catalog) == 50, "the completed publish is marker-committed")
   }
 
   test("redelivery storm: N sequential redeliveries of one job stay exactly-once") {
@@ -102,5 +98,62 @@ class PublishChaosSpec extends SparkTestBase {
       assert(rows(catalog) == 50, "every replay must land on the same 50 rows")
     }
     assert(catalog.committedKeys("db", "t").size == 1)
+  }
+
+  test("a batch without its marker is never read, compacted or duplicated by its redelivery") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("chaos").toString
+    val catalog = new GraftCatalog(spark, s"$tmp/warehouse")
+    catalog.ensureTable("db", "t")
+    catalog.addColumns("db", "t", Map("k" -> "int"))
+    val fs = new HPath(tmp).getFileSystem(spark.sessionState.newHadoopConf())
+    def batch(ids: Range) =
+      ids.map(i => (i.toLong, i.toLong)).toDF("__row_id", "k").repartition(2)
+    def ids() = catalog.read("db", "t").select("__row_id").as[Long].collect().toSeq
+    // the state a worker leaves when it dies after publishing a batch's
+    // two files and before writing its marker
+    def publishWithoutMarker(rows: Range, jobKey: String): Unit = {
+      val before = catalog.committedKeys("db", "t")
+      catalog.append("db", "t", batch(rows), Some(jobKey))
+      (catalog.committedKeys("db", "t") -- before).foreach(k =>
+        fs.delete(new HPath(s"$tmp/warehouse/db/t/commits/$k.json"), false))
+    }
+
+    catalog.append("db", "t", batch(1 to 10), Some("q1"))
+    publishWithoutMarker(11 to 20, "q2") // redelivered below
+    publishWithoutMarker(21 to 30, "q3") // dead-lettered: never redelivered
+    assert(ids().sorted == (1L to 10L), "unmarked batches are hidden")
+
+    // a rewrite reads through `read`: it must not fold the unmarked
+    // files into the new generation, where no key names them any more
+    catalog.compact("db", "t")
+    assert(ids().sorted == (1L to 10L), "compaction keeps only committed rows")
+
+    // the redelivery of q2 republishes it under its key, exactly once
+    catalog.append("db", "t", batch(11 to 20), Some("q2"))
+    assert(ids().sorted == (1L to 20L), "every row sent is held exactly once")
+    catalog.compact("db", "t")
+    assert(ids().sorted == (1L to 20L), "the dead-lettered q3 stays hidden")
+  }
+
+  test("worker killed before the index params write: the next batch is accepted") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("chaos").toString
+    val catalog = new GraftCatalog(spark, s"$tmp/warehouse")
+    // a convention other than the defaults (the md5 k-hash family)
+    val params = GraftCatalog.DedupParams(4, 64, 16, 7L, useMd5 = true, oph = false)
+    catalog.addColumns("db", "docs", Map("text" -> "string"))
+    catalog.setDedupPolicy("db", "docs", GraftCatalog.DedupPolicy("text", "tag", 0.7, params))
+    val shared = (1 to 50).map(i => s"cv$i").mkString(" ")
+    catalog.appendWithPolicy("db", "docs", Seq(s"$shared ending one").toDF("text"))
+
+    // the crash window: the index rows landed, params.json did not
+    val paramsFile = new HPath(catalog.dedupIndexDir("db", "docs"), "params.json")
+    paramsFile.getFileSystem(spark.sessionState.newHadoopConf()).delete(paramsFile, false)
+
+    catalog.appendWithPolicy("db", "docs", Seq(s"$shared ending two").toDF("text"))
+    assert(catalog.storedIndexParams("db", "docs").contains(params))
+    assert(catalog.read("db", "docs").filter($"__is_dup").count() == 1,
+      "the second batch probes the index and is tagged a near-dup")
   }
 }

@@ -94,7 +94,6 @@ class SidecarChaosSpec extends SparkTestBase {
     cat.addColumns("db", "t", Map("k" -> "int"))
     import spark.implicits._
     cat.append("db", "t", Seq(1, 2, 3).toDF("k"))
-    spark.conf.set("graft.warehouse.strictCommits", "true")
     // local fs mtime is ms-granular, so a 1 ms slack is sound HERE and
     // lets the test settle fast; production keeps the 2 s default for
     // coarse-mtime stores (see the granularity test below)
@@ -114,10 +113,7 @@ class SidecarChaosSpec extends SparkTestBase {
       assert(cat.read("db", "t").count() == 4)
       assert(cat.commitListCalls.get() > settled,
         "a publish must force a fresh commits/ list")
-    } finally {
-      spark.conf.unset("graft.warehouse.strictCommits")
-      spark.conf.unset("graft.commits.mtimeSlackMs")
-    }
+    } finally spark.conf.unset("graft.commits.mtimeSlackMs")
   }
 
   test("commits cache is never served inside the mtime-granularity window") {
@@ -133,13 +129,10 @@ class SidecarChaosSpec extends SparkTestBase {
     cat.addColumns("db", "g", Map("k" -> "int"))
     import spark.implicits._
     cat.append("db", "g", Seq(1).toDF("k"))
-    spark.conf.set("graft.warehouse.strictCommits", "true")
-    try {
-      cat.read("db", "g").count() // lists, caches (listedAt ≈ mtime)
-      val before = cat.commitListCalls.get()
-      (1 to 3).foreach(_ => cat.read("db", "g").count())
-      assert(cat.commitListCalls.get() == before + 3,
-        "reads within the slack window must re-list, not trust the cache")
-    } finally spark.conf.unset("graft.warehouse.strictCommits")
+    cat.read("db", "g").count() // lists, caches (listedAt ≈ mtime)
+    val before = cat.commitListCalls.get()
+    (1 to 3).foreach(_ => cat.read("db", "g").count())
+    assert(cat.commitListCalls.get() == before + 3,
+      "reads within the slack window must re-list, not trust the cache")
   }
 }

@@ -44,21 +44,45 @@ class UtilSpec extends SparkTestBase {
       Ulid.make(2L, Array.fill[Byte](10)(0)))
   }
 
+  /** Run `body` on a new session over the shared SparkContext, built
+    * with [[graft.functions.GraftExtensions]]. `withExtensions`
+    * exercises the same injection hook as the
+    * `spark.sql.extensions=graft.functions.GraftExtensions` conf; the
+    * conf form is a STATIC setting a cluster supplies at boot, which a
+    * test sharing an already-running SparkContext cannot. */
+  private def withExtendedSession(body: org.apache.spark.sql.SparkSession => Unit): Unit = {
+    import org.apache.spark.sql.SparkSession
+    spark // force the shared session (and its SparkContext) first
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val extended = SparkSession.builder()
+      .master("local[2]")
+      .withExtensions(new graft.functions.GraftExtensions())
+      .getOrCreate()
+    try {
+      assert(extended ne spark, "must be a new session over the same context")
+      body(extended)
+    } finally {
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+      SparkSession.setActiveSession(spark); SparkSession.setDefaultSession(spark)
+    }
+  }
+
   test("registered SQL functions: cosine_sim / simhash64 / rolling_fingerprint") {
-    NativeExpressions.registerAll(spark)
-    val cos = spark.sql(
-      "select cosine_sim(array(1.0D, 0.0D, 1.0D), array(1.0D, 1.0D, 0.0D)) as c")
-      .collect().head.getDouble(0)
-    assert(math.abs(cos - 0.5) < 1e-12)
-    val sh = spark.sql("select simhash64(array('a','b','c')) as s").collect().head.getLong(0)
-    assert(sh == spark.sql("select simhash64(array('a','b','c')) as s").collect().head.getLong(0))
-    // native fingerprint must equal the SQL transform+array_min form
-    val sqlForm = spark.sql(
-      "select array_min(transform(sequence(1, greatest(length('hello world hello spark') - 15, 1)), " +
-        "i -> md5(substring('hello world hello spark', i, 16)))) as fp").collect().head.getString(0)
-    val native = spark.sql("select rolling_fingerprint('hello world hello spark') as fp")
-      .collect().head.getString(0)
-    assert(native == sqlForm)
+    withExtendedSession { ext =>
+      val cos = ext.sql(
+        "select cosine_sim(array(1.0D, 0.0D, 1.0D), array(1.0D, 1.0D, 0.0D)) as c")
+        .collect().head.getDouble(0)
+      assert(math.abs(cos - 0.5) < 1e-12)
+      val sh = ext.sql("select simhash64(array('a','b','c')) as s").collect().head.getLong(0)
+      assert(sh == ext.sql("select simhash64(array('a','b','c')) as s").collect().head.getLong(0))
+      // native fingerprint must equal the SQL transform+array_min form
+      val sqlForm = ext.sql(
+        "select array_min(transform(sequence(1, greatest(length('hello world hello spark') - 15, 1)), " +
+          "i -> md5(substring('hello world hello spark', i, 16)))) as fp").collect().head.getString(0)
+      val native = ext.sql("select rolling_fingerprint('hello world hello spark') as fp")
+        .collect().head.getString(0)
+      assert(native == sqlForm)
+    }
   }
 
   test("snowflake_id expression: unique across partitions and rows") {
@@ -101,30 +125,17 @@ class UtilSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects native functions into a fresh session") {
-    import org.apache.spark.sql.SparkSession
-    spark // force the shared session (and its SparkContext) first
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    // withExtensions exercises the same injection hook as the
-    // `spark.sql.extensions=graft.functions.GraftExtensions` conf; the
-    // conf form is a STATIC setting a cluster supplies at boot, which
-    // a test sharing an already-running SparkContext cannot.
-    val extended = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
-    try {
-      assert(extended ne spark, "must be a new session over the same context")
-      val c = extended.sql(
+    withExtendedSession { ext =>
+      val c = ext.sql(
         "select cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) as c")
         .head.getDouble(0)
       assert(math.abs(c - 1.0) < 1e-12)
-      assert(extended.sql("select simhash64(array('a', 'b')) as h")
+      assert(ext.sql("select simhash64(array('a', 'b')) as h")
         .head.getLong(0) != 0L)
-      assert(extended.sql("select hyperplane_buckets(array(1.0d)) as b")
+      assert(ext.sql("select hyperplane_buckets(array(1.0d)) as b")
         .head.getSeq[Long](0).length == 4)
-    } finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      SparkSession.setActiveSession(spark); SparkSession.setDefaultSession(spark)
+      assert(ext.sql("select minhash_signature(array('a', 'b')) as m")
+        .head.getSeq[Long](0).length == 128)
     }
   }
 
