@@ -6,7 +6,7 @@ import graft.functions.JValue
 import graft.functions.JValue._
 import graft.query.{Copier, QueryService}
 import graft.sources._
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import java.io.OutputStreamWriter
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
@@ -437,16 +437,19 @@ final class GraftServer(spark: SparkSession, root: String, workerCount: Int = 2,
   private def streamQuery(ex: HttpExchange, db: String, query: String, format: String,
                           restricted: Boolean = true): Unit = {
     val dbCatalog = catalogFor(db)
+    val dest = destInfo(db)
+    // Outside the try: a storage fault while building the views is the
+    // server's (500), not a bad query.
+    if (dest._1 != "jdbc") dbCatalog.registerViews(db)
     val df =
       try {
-        destInfo(db) match {
+        dest match {
           // Federated destination: the external engine executes the SQL
           // against ITS OWN database (the reference's per-destination
           // isolation) — and the JDBC query option wraps it in a SELECT
           // subquery, so tenant passthrough is read-only by construction.
           case ("jdbc", url) => new JdbcDestination(dbCatalog.spark, url).query(query)
           case _ =>
-            dbCatalog.registerViews(db)
             if (restricted)
               QueryService.tenantQuery(dbCatalog.spark, query, Seq(s"$root/warehouse/$db"))
             else QueryService.query(dbCatalog.spark, query)
@@ -454,6 +457,8 @@ final class GraftServer(spark: SparkSession, root: String, workerCount: Int = 2,
       } catch {
         case e: QueryService.QueryRejected =>
           respond(ex, 403, e.getMessage, "text/plain"); return
+        case e: AnalysisException =>
+          respond(ex, 400, s"bad query: ${e.getMessage}", "text/plain"); return
       }
     val contentType = format.toLowerCase match {
       case "csv"    => "text/csv"

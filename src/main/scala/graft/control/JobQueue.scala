@@ -1,8 +1,5 @@
 package graft.control
 
-import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
 /** Control-plane job messages (the reference's queue payloads:
   * /root/reference/pkg/storage/queue/models/models.go and
   * pkg/storage/database/models/models.go:70-91). */
@@ -19,8 +16,7 @@ object JobMessage {
   * DB table + FOR UPDATE SKIP LOCKED —
   * pkg/storage/database/gorm/queue.go:15-91): claim on dequeue, remove
   * on ack, redeliver on nack, duplicates possible, loss impossible.
-  * Implementations: [[InMemoryJobQueue]] (tests/ephemeral) and
-  * [[MetaStore]] (Derby-backed, survives restarts). */
+  * [[MetaStore]] implements it (Derby-backed, survives restarts). */
 trait JobQueue {
   def enqueue(msg: JobMessage): Long
   def dequeue(timeoutMs: Long): Option[(Long, JobMessage)]
@@ -28,41 +24,4 @@ trait JobQueue {
   def nack(id: Long): Unit
   def isEmpty: Boolean
   def size: Int
-}
-
-/** Lock-free in-memory queue, no persistence. Drain semantics match the
-  * Derby arm: `isEmpty`/`size` count every job from enqueue until ack via
-  * an independent counter, so a job a worker has claimed (out of `pending`
-  * but not yet executed) is never invisible — the DB arm gets the same
-  * guarantee from its atomic `status='claimed'` UPDATE. */
-final class InMemoryJobQueue extends JobQueue {
-  private val idGen = new AtomicLong(0)
-  private val pending = new LinkedBlockingQueue[(Long, JobMessage)]()
-  private val inFlight = new ConcurrentHashMap[Long, JobMessage]()
-  private val unfinished = new AtomicInteger(0)
-
-  def enqueue(msg: JobMessage): Long = {
-    val id = idGen.incrementAndGet()
-    unfinished.incrementAndGet() // count before publish: never under-counts
-    pending.put((id, msg))
-    id
-  }
-
-  /** Claim the next message (blocking up to timeoutMs); ack or nack it. */
-  def dequeue(timeoutMs: Long): Option[(Long, JobMessage)] = {
-    val item = pending.poll(timeoutMs, TimeUnit.MILLISECONDS)
-    if (item == null) None
-    else { inFlight.put(item._1, item._2); Some(item) }
-  }
-
-  def ack(id: Long): Unit =
-    if (inFlight.remove(id) != null) unfinished.decrementAndGet()
-
-  def nack(id: Long): Unit = {
-    val msg = inFlight.remove(id)
-    if (msg != null) pending.put((id, msg))
-  }
-
-  def isEmpty: Boolean = unfinished.get() == 0
-  def size: Int = unfinished.get()
 }

@@ -808,47 +808,13 @@ object NativeExpressions {
     override def initialValue(): ClfScoreCache = new ClfScoreCache
   }
 
-  /** Hashed bag-of-words linear-classifier raw score from a token
-    * array: Σ over tokens of ((first 24 bits of md5("clf_"+token))
-    * % 2001 − 1000) — one digest loop per row. The HOF form
-    * (conv(substring(md5(...)))  inside a transform lambda) pays
-    * interpreted per-token expression eval plus hex-string parsing;
-    * measured 2.5× DuckDB at sf3 before this kernel. */
-  case class ClassifierScore(child: Expression)
-      extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = LongType
-    override def nullSafeEval(v: Any): Any = {
-      val arr = v.asInstanceOf[ArrayData]
-      val n = arr.numElements()
-      val md = md5Local.get()
-      val cache = clfCacheLocal.get()
-      val d = new Array[Byte](16)
-      var sum = 0L
-      var i = 0
-      while (i < n) {
-        val tb = (if (arr.isNullAt(i)) UTF8String.EMPTY_UTF8
-                  else arr.getUTF8String(i)).getBytes
-        sum += cache.getOrCompute(tb, 0, tb.length) {
-          md.reset()
-          md.update("clf_".getBytes(StandardCharsets.UTF_8))
-          md.update(tb, 0, tb.length)
-          md.digest(d, 0, 16)
-          (((d(0) & 0xffL) << 16) | ((d(1) & 0xffL) << 8) | (d(2) & 0xffL)) % 2001L - 1000L
-        }
-        i += 1
-      }
-      sum
-    }
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-  }
-
-  /** [[ClassifierScore]] fused with the tokenizer: takes the RAW text,
-    * lowercases once (`UTF8String.toLowerCase` — the same kernel
-    * Spark's `lower()` uses, so semantics are identical), then walks
-    * the UTF-8 bytes splitting on single spaces and digests each
-    * token slice in place. Scoring ≡
-    * `ClassifierScore(split(lower(text), " "))` by construction
-    * (split keeps empty fields, so does the byte walk), but with ZERO
+  /** Hashed bag-of-words linear-classifier raw score of the RAW text:
+    * Σ over the tokens t of `split(lower(text), " ")` of
+    * ((first 24 bits of md5("clf_"+t)) % 2001 − 1000). Lowercases once
+    * (`UTF8String.toLowerCase` — the same kernel Spark's `lower()`
+    * uses, so semantics are identical), then walks the UTF-8 bytes
+    * splitting on single spaces and digests each token slice in place
+    * (split keeps empty fields, so does the byte walk), with ZERO
     * per-token allocations — no token array, no UTF-16 round-trip, no
     * "clf_"+t concat string. On a corpus scan this is the difference
     * between an allocation-bound stage and a digest-bound one. */
@@ -2066,8 +2032,6 @@ object NativeExpressions {
     ExpressionUtils.column(DotProduct(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
   def simhash64(tokens: Column, useMd5: Boolean = false): Column =
     ExpressionUtils.column(SimHash64(ExpressionUtils.expression(tokens), useMd5))
-  def minhash_signature(shingles: Column, numHashes: Int, seed: Long = 42L): Column =
-    ExpressionUtils.column(MinHashSignature(ExpressionUtils.expression(shingles), numHashes, seed))
   def signature_agreement(a: Column, b: Column): Column =
     ExpressionUtils.column(SignatureAgreement(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
   def snowflake_id(baseNode: Int = Snowflake.defaultNodeId): Column =
@@ -2094,8 +2058,6 @@ object NativeExpressions {
       ExpressionUtils.expression(text), ExpressionUtils.expression(spans)))
   def bigram_hashes(text: Column): Column =
     ExpressionUtils.column(BigramHashes(ExpressionUtils.expression(text)))
-  def classifier_score(tokens: Column): Column =
-    ExpressionUtils.column(ClassifierScore(ExpressionUtils.expression(tokens)))
   def space_token_count(text: Column): Column =
     ExpressionUtils.column(SpaceTokenCount(ExpressionUtils.expression(text)))
   def classifier_score_text(text: Column): Column =
@@ -2142,41 +2104,40 @@ object NativeExpressions {
     ExpressionUtils.column(BloomMightContain(ExpressionUtils.expression(hash), bits, numHashes))
 }
 
-/** The one registration of graft's functions for SQL use (`SELECT
-  * cosine_sim(a, b) FROM ...`): `--conf spark.sql.extensions=
-  * graft.functions.GraftExtensions`, or `withExtensions` on a session
-  * builder, injects them into every session built with it. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+/** The one list of graft's functions for SQL use (`SELECT
+  * cosine_sim(a, b) FROM ...`). Passthrough queries get it through
+  * [[GraftExtensions.register]] on the session they plan on. */
+object GraftExtensions {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
-  import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
   import NativeExpressions._
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    def info(name: String) = new ExpressionInfo("graft", name)
-    e.injectFunction((FunctionIdentifier("cosine_sim"), info("cosine_sim"),
-      es => CosineSimilarity(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("dot_product"), info("dot_product"),
-      es => DotProduct(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      es => SimHash64(es.head)))
-    e.injectFunction((FunctionIdentifier("minhash_signature"), info("minhash_signature"),
-      es => MinHashSignature(es.head, 128, 42L)))
-    e.injectFunction((FunctionIdentifier("signature_agreement"), info("signature_agreement"),
-      es => SignatureAgreement(es.head, es(1))))
-    e.injectFunction((FunctionIdentifier("snowflake_id"), info("snowflake_id"),
-      _ => SnowflakeId(Snowflake.defaultNodeId)))
-    e.injectFunction((FunctionIdentifier("rolling_fingerprint"), info("rolling_fingerprint"),
-      es => RollingFingerprint(es.head, 16)))
-    e.injectFunction((FunctionIdentifier("word_shingles"), info("word_shingles"),
-      es => WordShingles(es.head, 5)))
-    e.injectFunction((FunctionIdentifier("minhash_from_tokens"), info("minhash_from_tokens"),
-      es => MinHashFromTokens(es.head, 5, 128, 42L, useMd5 = false)))
-    e.injectFunction((FunctionIdentifier("oneperm_minhash"), info("oneperm_minhash"),
-      es => OnePermMinHash(es.head, 5, 128, 42L, useMd5 = false)))
-    e.injectFunction((FunctionIdentifier("hyperplane_buckets"), info("hyperplane_buckets"),
-      es => HyperplaneBuckets(es.head, 64, 8, 4, 42)))
-    e.injectFunction((FunctionIdentifier("pii_scan"), info("pii_scan"),
-      es => PiiScan(es.head)))
-    e.injectFunction((FunctionIdentifier("repetition_stats"), info("repetition_stats"),
-      es => RepetitionStats(es.head)))
+
+  private def fn(name: String)(build: FunctionBuilder)
+      : (FunctionIdentifier, ExpressionInfo, FunctionBuilder) =
+    (FunctionIdentifier(name), new ExpressionInfo("graft", name), build)
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, FunctionBuilder)] = Seq(
+    fn("cosine_sim")(es => CosineSimilarity(es.head, es(1))),
+    fn("dot_product")(es => DotProduct(es.head, es(1))),
+    fn("simhash64")(es => SimHash64(es.head)),
+    fn("minhash_signature")(es => MinHashSignature(es.head, 128, 42L)),
+    fn("signature_agreement")(es => SignatureAgreement(es.head, es(1))),
+    fn("snowflake_id")(_ => SnowflakeId(Snowflake.defaultNodeId)),
+    fn("rolling_fingerprint")(es => RollingFingerprint(es.head, 16)),
+    fn("word_shingles")(es => WordShingles(es.head, 5)),
+    fn("minhash_from_tokens")(es => MinHashFromTokens(es.head, 5, 128, 42L, useMd5 = false)),
+    fn("oneperm_minhash")(es => OnePermMinHash(es.head, 5, 128, 42L, useMd5 = false)),
+    fn("hyperplane_buckets")(es => HyperplaneBuckets(es.head, 64, 8, 4, 42)),
+    fn("pii_scan")(es => PiiScan(es.head)),
+    fn("repetition_stats")(es => RepetitionStats(es.head)))
+
+  /** Registers [[functions]] on `spark`'s own function registry; later
+    * calls are no-ops. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(functions.head._1))
+        functions.foreach { case (id, info, build) => registry.registerFunction(id, info, build) }
+    }
   }
 }

@@ -95,17 +95,6 @@ object TextFunctions {
       "keep" -> keep)
   }
 
-  /** Composite quality score in [0,1]: weighted blend of signals with
-    * saturating length terms (heuristic, deterministic). */
-  def qualityScore(text: Column): Column = {
-    val sig = qualitySignals(text).toMap
-    val lenTerm = least(sig("n_words").cast("double") / 100.0, lit(1.0))
-    round(least(greatest(
-      lit(0.4) * lenTerm + lit(0.3) * sig("alpha_ratio") +
-        lit(0.3) * least(sig("stopword_ratio") * 4.0, lit(1.0)),
-      lit(0.0)), lit(1.0)), 4)
-  }
-
   // ---- language id ------------------------------------------------
 
   /** Stopword-profile language ID over en/de/es/fr/it: the language

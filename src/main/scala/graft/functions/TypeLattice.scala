@@ -94,9 +94,4 @@ object TypeLattice {
     case BooleanType                                   => Bool
     case _                                             => String
   }
-
-  def toStructType(types: Map[String, String]): StructType =
-    StructType(types.toSeq.sortBy(_._1).map { case (n, t) =>
-      StructField(n, toSparkType(t), nullable = true)
-    })
 }

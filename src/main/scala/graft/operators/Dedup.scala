@@ -28,18 +28,6 @@ object Dedup {
   def wordShingles(toks: Column, k: Int): Column =
     graft.functions.NativeExpressions.word_shingles(toks, k)
 
-  // ---- exact -------------------------------------------------------
-
-  /** Exact dedup by content hash: every row keeps its duplicate-group
-    * representative (min id over identical content). One hash-shuffle;
-    * at scale this is the cheapest possible dedup and the baseline the
-    * fuzzy variants are measured against. */
-  def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val hashed = df.select(col(idCol), md5(col(textCol)).as("__h"))
-    val reps = hashed.groupBy("__h").agg(min(col(idCol)).as("dup_group"))
-    hashed.join(reps, "__h").select(col(idCol), col("dup_group")).drop("__h")
-  }
-
   // ---- MinHash + LSH ----------------------------------------------
 
   /** (doc id, minhash signature array, shingle count). Computed
@@ -667,22 +655,6 @@ object Dedup {
         out.result().iterator
       }
       .toDF("u", "v")
-  }
-
-  /** Per-doc dup group with FULL transitive closure: connected
-    * components over the MinHash-LSH pair graph, so chains of near-dups
-    * collapse to one group (cf. minhashDedup, which is one hop). */
-  def minhashDedupGroups(df: DataFrame, idCol: String, textCol: String,
-                         shingleK: Int = 5, numHashes: Int = 128, bands: Int = 32,
-                         threshold: Double = 0.7, oph: Boolean = true): DataFrame = {
-    val pairs = minhashPairs(df, idCol, textCol, shingleK, numHashes, bands, threshold,
-      oph = oph)
-    val comp = connectedComponents(pairs, "doc_a", "doc_b")
-      .withColumnRenamed("node", idCol)
-    df.select(col(idCol))
-      .join(comp, Seq(idCol), "left_outer")
-      .select(col(idCol),
-        coalesce(col("component"), col(idCol)).as("dup_group"))
   }
 
   // ---- exact n-gram Jaccard ---------------------------------------

@@ -17,30 +17,6 @@ object Flatten {
     def rendered: String = JValue.render(row)
   }
 
-  /** Distributed flatten of a Dataset of JSON documents → (table,
-    * jsonLine) rows, for bulk backfills that never touch the HTTP
-    * path. ID generators are created per partition (ULIDs are random;
-    * snowflake node ids fold in the partition id), so executors never
-    * coordinate. */
-  def flattenDs(ds: org.apache.spark.sql.Dataset[String], table: String,
-                mode: String): org.apache.spark.sql.DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.mapPartitions { lines =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      lazy val snowflake = new graft.functions.Snowflake(
-        (graft.functions.Snowflake.defaultNodeId + pid) % 1024)
-      lines.flatMap { json =>
-        val rows = mode match {
-          case "vertical"   => vertical(table, json)
-          case "multitable" => multiTable(table, json, () => snowflake.next())
-          case _            => horizontal(table, json)
-        }
-        rows.map(r => (r.table, r.rendered))
-      }
-    }.toDF("table", "json")
-  }
-
   private def joinPath(path: Seq[String]): String = path.mkString("_")
 
   // ---- horizontal (flattener.go:145-158) ---------------------------

@@ -50,30 +50,8 @@ object Similarity {
     corpus.filter(pmod(col(idCol), lit(stride)) === 0)
       .select(col(idCol).as("centroid_id"), col(vecCol).as("centroid_vec"))
 
-  /** Deterministic Lloyd refinement of the seed centroids: iters
-    * rounds of assign → element-wise mean. Each round is one shuffle
-    * of (cell, position, value) triples — O(|corpus|·dim) rows with
-    * map-side partial sums, the standard distributed k-means step. */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                      stride: Int, iters: Int): DataFrame = {
-    var centroids = seedCentroids(corpus, idCol, vecCol, stride)
-    val vecs = corpus.select(col(idCol), col(vecCol).cast("array<double>").as("__v"))
-    (1 to iters).foreach { _ =>
-      val assigned = ivfAssign(vecs, idCol, "__v", centroids)
-      val means = assigned
-        .select(col("cell"), posexplode(col("__v")).as(Seq("__pos", "__x")))
-        .groupBy("cell", "__pos").agg(avg("__x").as("__m"))
-        .groupBy("cell").agg(
-          array_sort(collect_list(struct(col("__pos"), col("__m")))).as("__pm"))
-        .select(col("cell").as("centroid_id"),
-          transform(col("__pm"), p => p.getField("__m")).as("centroid_vec"))
-      centroids = means
-    }
-    centroids
-  }
-
-  /** Engine-exact distributed k-means (Lloyd): like [[kmeansCentroids]]
-    * but the per-cell mean is computed in fixed-point — every element
+  /** Engine-exact distributed k-means (Lloyd) from the seed centroids:
+    * the per-cell mean is computed in fixed-point — every element
     * quantizes to integer micro-units BEFORE the cross-row sum, so the
     * reduction is order-independent (long addition commutes; double
     * addition does not) and a SQL oracle replays every round

@@ -535,7 +535,7 @@ object TextPipeline {
     * real deployment swaps the weight expression for a broadcast map
     * lookup without touching the plan shape. Scoring is one native
     * digest loop per row ([[graft.functions.NativeExpressions
-    * .ClassifierScore]]); the equivalent transform+aggregate HOF pays
+    * .ClassifierScoreText]]); the equivalent transform+aggregate HOF pays
     * interpreted conv/substring per token and measured 2.5× DuckDB
     * at sf3 (spec'd equal to this kernel).
     *
@@ -544,8 +544,8 @@ object TextPipeline {
   def classifierScore(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // Fused kernel: lower + space-split + per-token digest in one byte
     // walk (no token array); n_tokens is length arithmetic (lower()
-    // can't move a space). ≡ classifier_score(split(lower(text), " "))
-    // — spec'd equal against the HOF form.
+    // can't move a space). Spec'd equal against the HOF form over
+    // split(lower(text), " ").
     docs.select(col(idCol),
         graft.functions.TextFunctions.spaceTokenCount(col(textCol)).as("n_tokens"),
         graft.functions.NativeExpressions.classifier_score_text(col(textCol))

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.functions.GraftExtensions
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
@@ -26,7 +27,8 @@ import java.nio.file.Paths
   * which coalesces each scan to one partition when the input files
   * total at most `spark.sql.files.openCostInBytes` (4 MB by default),
   * so aggregates, sorts, windows, set ops and joins need no exchange.
-  * Larger inputs keep Spark's distributed plan.
+  * Larger inputs keep Spark's distributed plan. They also register
+  * graft's SQL functions there, so every query can call them.
   */
 object QueryService {
 
@@ -37,8 +39,15 @@ object QueryService {
   }
 
   def query(spark: SparkSession, sql: String): DataFrame = {
-    SmallQueries.install(spark)
+    prepare(spark)
     spark.sql(cleanQuery(sql))
+  }
+
+  /** What every passthrough query plans with: [[SmallQueries]] and
+    * graft's SQL functions, each installed once per session. */
+  private def prepare(spark: SparkSession): Unit = {
+    SmallQueries.install(spark)
+    GraftExtensions.register(spark)
   }
 
   /** Raised when a tenant query breaks out of its sandbox; the server
@@ -62,7 +71,7 @@ object QueryService {
     */
   def tenantQuery(spark: SparkSession, sql: String,
                   allowedRoots: Seq[String]): DataFrame = {
-    SmallQueries.install(spark)
+    prepare(spark)
     val cleaned = cleanQuery(sql)
     val parsed = spark.sessionState.sqlParser.parsePlan(cleaned)
     // collectWithSubqueries everywhere: plain collect/foreach do NOT

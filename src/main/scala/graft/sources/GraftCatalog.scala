@@ -867,9 +867,8 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     }
 
   /** Append honoring the table's [[GraftCatalog.DedupPolicy]] — the
-    * ONE policy-aware entry shared by every ingest surface (HTTP batch
-    * loads via Loader, structured-streaming micro-batches via
-    * StreamingIngest): no policy, or a batch without the text column,
+    * ONE policy-aware entry of the ingest path (every load goes through
+    * Loader): no policy, or a batch without the text column,
     * is a plain [[append]]; otherwise the batch probes the table's
     * stored MinHash band index (batch-sized work, never corpus-sized
     * — [[graft.operators.Dedup.minhashIncrementalAgainst]]), near-dups

@@ -4,14 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE place the bench/probe session recipe lives.
   *
-  * [[graft.Bench]] and the attribution probe
-  * ([[graft.tools.StageProbe]]; the stats probe whose readings
-  * BENCH_LOCAL.md "Size-adaptive packed-kernel floors" cites) must run
-  * the SAME conf: a probe that omits Bench's single-JVM settings (the
-  * 512m measured-stats broadcast threshold, the objectHashAggregate
-  * fallback threshold, codegen cache sizing) can pick a DIFFERENT
-  * physical plan — e.g. sort-merge where Bench broadcasts — and then
-  * attributes wall-clock to stages the bench run never executes.
+  * [[graft.Bench]] and [[graft.Explain]] (whose plan dumps explain
+  * Bench's timings) must run the SAME conf: a probe that omits Bench's
+  * single-JVM settings (the 512m measured-stats broadcast threshold,
+  * the objectHashAggregate fallback threshold, codegen cache sizing)
+  * can pick a DIFFERENT physical plan — e.g. sort-merge where Bench
+  * broadcasts — and then attributes wall-clock to stages the bench run
+  * never executes.
   *
   * Env knobs (identical everywhere): SPARK_GRAFT_CPUS,
   * SPARK_GRAFT_SHUFFLE, SPARK_GRAFT_AQE, SPARK_GRAFT_MASTER,

@@ -33,13 +33,6 @@ object GraftConf {
   def bytes(ss: SparkSession, key: String, default: Long): Long =
     read(ss, key, default, "a byte size such as 262144 or 256k")(JavaUtils.byteStringAsBytes)
 
-  /** One of `allowed`, compared exactly. */
-  def choice(ss: SparkSession, key: String, default: String,
-             allowed: Seq[String]): String =
-    read(ss, key, default, allowed.mkString("one of ", ", ", "")) { v =>
-      if (allowed.contains(v)) v else throw new IllegalArgumentException(v)
-    }
-
   /** A free-form string such as a path; unset reads as None. */
   def string(ss: SparkSession, key: String): Option[String] =
     ss.conf.getOption(key).map(_.trim).filter(_.nonEmpty)

@@ -148,28 +148,6 @@ class FlattenSpec extends AnyFunSuite {
     }
   }
 
-  test("distributed flatten: multi-table FK wiring survives executor-side ids") {
-    val spark = SparkTestBase.session
-    import spark.implicits._
-    val docs = (1 to 20).map(i =>
-      s"""{"k": "doc$i", "items": [{"x": ${i * 10}}, {"x": ${i * 10 + 1}}]}""")
-    val out = Flatten.flattenDs(spark.createDataset(docs).repartition(4), "mt", "multitable")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-    val parents = out.filter(_._1 == "mt").map(p => JValue.parseObject(p._2))
-    val items = out.filter(_._1 == "items").map(p => JValue.parseObject(p._2))
-    assert(parents.length == 20 && items.length == 40)
-    val parentIds = parents.map(p => fieldsOf(p)("id")).toSet
-    assert(parentIds.size == 20, "executor-side snowflake ids must be unique")
-    // every item's FK resolves to exactly one parent
-    items.foreach { it =>
-      assert(parentIds.contains(fieldsOf(it)("mt_id")))
-    }
-    // vertical mode: cross-product count with per-doc ULIDs
-    val vOut = Flatten.flattenDs(spark.createDataset(docs).repartition(4), "v", "vertical")
-      .collect()
-    assert(vOut.length == 40) // 2 item-rows per doc
-  }
-
   test("horizontal roundtrip renders valid compact JSON") {
     val rows = Flatten.horizontal("t", """{"a":{"b":"x \" y"},"n":[1.5,true,null]}""")
     val rendered = rows.head.rendered

@@ -291,50 +291,6 @@ class GraftServerSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
-  test("HTTP batch and streaming ingest share one dedup convention and index") {
-    val (srv, base) = newServer()
-    try {
-      val shared = (1 to 50).map(i => s"pb$i").mkString(" ")
-      assert(post(s"$base/api/tables/docs_parity/dedup?api_key=localkey",
-        """{"text_col": "text", "num_hashes": 64, "bands": 16,
-          | "use_md5": true, "oph": false}""".stripMargin).statusCode() == 200)
-      // original lands over HTTP
-      post(s"$base/api/data/insert/docs_parity?api_key=localkey",
-        s"""{"text": "$shared ending one", "tag": "http-first"}""")
-      assert(srv.drain())
-      // near-dup arrives via a structured stream into the SAME table:
-      // foreachBatch goes through the same appendWithPolicy, which now
-      // carries the stored convention
-      val tmp = Files.createTempDirectory("graft-parity")
-      Files.writeString(tmp.resolve("b1.ndjson"),
-        s"""{"text": "$shared ending two", "tag": "stream-second"}""" + "\n")
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("tag",
-          org.apache.spark.sql.types.StringType)))
-      val q = graft.streaming.StreamingIngest.ingestToCatalog(
-        graft.streaming.StreamingIngest.streamNdjsonDir(
-          spark, tmp.toString, schema),
-        srv.catalog, "default", "docs_parity", s"$tmp/ckpt")
-      q.awaitTermination(60000)
-      // and the same doc re-delivered over HTTP again
-      post(s"$base/api/data/insert/docs_parity?api_key=localkey",
-        s"""{"text": "$shared ending three", "tag": "http-third"}""")
-      assert(srv.drain())
-
-      val rows = srv.catalog.read("default", "docs_parity")
-        .select("tag", "__is_dup").collect()
-        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      assert(rows == Map("http-first" -> false, "stream-second" -> true,
-        "http-third" -> true), s"identical verdicts across paths: $rows")
-      val bands = spark.read.parquet(
-        new org.apache.hadoop.fs.Path(srv.catalog.dedupIndexDir("default", "docs_parity"), "bands").toString)
-      assert(bands.select("doc").distinct().count() == 1,
-        "index grows once across both ingest paths")
-    } finally srv.stop()
-  }
-
   test("ingest dedup policy: duplicates WITHIN one batch are caught too") {
     val (srv, base) = newServer()
     try {
@@ -485,6 +441,29 @@ class GraftServerSpec extends SparkTestBase {
         s"select sum(a) as s from json.`${f.toAbsolutePath}`")
       assert(q.statusCode() == 200)
       assert(q.body() == """[{"s":3}]""", q.body())
+    } finally srv.stop()
+  }
+
+  test("passthrough SQL can call graft's functions, for tenant and admin keys") {
+    val (srv, base) = newServer()
+    try {
+      for (key <- Seq("localkey", "adminkey")) {
+        val q = post(s"$base/api/data/query?api_key=$key",
+          "select cosine_sim(array(1.0d), array(1.0d)) as c")
+        assert(q.statusCode() == 200, q.body())
+        assert(q.body() == """[{"c":1.0}]""", q.body())
+      }
+    } finally srv.stop()
+  }
+
+  test("a query that does not analyze is a 400, not a 500") {
+    val (srv, base) = newServer()
+    try {
+      val unknown = post(s"$base/api/data/query?api_key=localkey", "select no_such_column")
+      assert(unknown.statusCode() == 400, unknown.body())
+      assert(unknown.body().startsWith("bad query: "), unknown.body())
+      val unparsed = post(s"$base/api/data/query?api_key=adminkey", "selec 1")
+      assert(unparsed.statusCode() == 400, unparsed.body())
     } finally srv.stop()
   }
 

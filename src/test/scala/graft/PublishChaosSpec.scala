@@ -1,6 +1,6 @@
 package graft
 
-import graft.control.{InMemoryJobQueue, JobMessage}
+import graft.control.{JobMessage, MetaStore}
 import graft.sources.{GraftCatalog, Loader}
 import org.apache.hadoop.fs.{Path => HPath}
 import java.nio.file.{Files, Paths}
@@ -29,34 +29,37 @@ class PublishChaosSpec extends SparkTestBase {
   private def rows(cat: GraftCatalog) = cat.read("db", "t").count()
 
   test("worker killed between load completion and ack: redelivery converges, no dups") {
-    val (catalog, loader, file, _) = fixture()
-    val queue = new InMemoryJobQueue
-    val id = queue.enqueue(JobMessage.InsertFile("db", "t", file.toString))
+    val (catalog, loader, file, tmp) = fixture()
+    // the Derby-backed queue the workers run on
+    val queue = new MetaStore(s"$tmp/meta")
+    try {
+      val id = queue.enqueue(JobMessage.InsertFile("db", "t", file.toString))
 
-    // attempt 1: the worker claims and fully processes the job — the
-    // table publish is COMPLETE — then dies before queue.ack(id)
-    val Some((jid, JobMessage.InsertFile(db, tbl, path))) = queue.dequeue(1000)
-    loader.loadFile(db, tbl, Paths.get(path), Some(s"q$jid"))
-    assert(rows(catalog) == 50, "attempt 1 published the batch")
-    assert(!queue.isEmpty, "unacked job must remain visible to the queue")
-    queue.nack(jid) // the redelivery a crashed claim gets
+      // attempt 1: the worker claims and fully processes the job — the
+      // table publish is COMPLETE — then dies before queue.ack(id)
+      val Some((jid, JobMessage.InsertFile(db, tbl, path))) = queue.dequeue(1000)
+      loader.loadFile(db, tbl, Paths.get(path), Some(s"q$jid"))
+      assert(rows(catalog) == 50, "attempt 1 published the batch")
+      assert(!queue.isEmpty, "unacked job must remain visible to the queue")
+      queue.nack(jid) // the redelivery a crashed claim gets
 
-    // attempt 2: another worker claims the SAME job id and reruns the
-    // SAME code path — the keyed republish replaces attempt 1's files
-    val Some((jid2, JobMessage.InsertFile(db2, tbl2, path2))) = queue.dequeue(1000)
-    assert(jid2 == jid, "queue ids are stable across redelivery")
-    loader.loadFile(db2, tbl2, Paths.get(path2), Some(s"q$jid2"))
-    queue.ack(jid2)
+      // attempt 2: another worker claims the SAME job id and reruns the
+      // SAME code path — the keyed republish replaces attempt 1's files
+      val Some((jid2, JobMessage.InsertFile(db2, tbl2, path2))) = queue.dequeue(1000)
+      assert(jid2 == jid, "queue ids are stable across redelivery")
+      loader.loadFile(db2, tbl2, Paths.get(path2), Some(s"q$jid2"))
+      queue.ack(jid2)
 
-    assert(rows(catalog) == 50, "redelivered job must not duplicate rows")
-    assert(queue.isEmpty)
-    // and a DIFFERENT job with the same content is a genuine second
-    // batch — keying is per job, not per content
-    val id3 = queue.enqueue(JobMessage.InsertFile("db", "t", file.toString))
-    val Some((jid3, JobMessage.InsertFile(_, _, p3))) = queue.dequeue(1000)
-    loader.loadFile("db", "t", Paths.get(p3), Some(s"q$jid3"))
-    queue.ack(jid3)
-    assert(rows(catalog) == 100, "distinct job ids append distinct batches")
+      assert(rows(catalog) == 50, "redelivered job must not duplicate rows")
+      assert(queue.isEmpty)
+      // and a DIFFERENT job with the same content is a genuine second
+      // batch — keying is per job, not per content
+      val id3 = queue.enqueue(JobMessage.InsertFile("db", "t", file.toString))
+      val Some((jid3, JobMessage.InsertFile(_, _, p3))) = queue.dequeue(1000)
+      loader.loadFile("db", "t", Paths.get(p3), Some(s"q$jid3"))
+      queue.ack(jid3)
+      assert(rows(catalog) == 100, "distinct job ids append distinct batches")
+    } finally queue.close()
   }
 
   test("worker killed MID-publish (files moved, marker never written): retry completes the batch") {

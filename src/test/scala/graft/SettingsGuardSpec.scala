@@ -28,7 +28,7 @@ class SettingsGuardSpec extends AnyFunSuite {
   }
 
   test("the README settings table lists exactly the keys read through GraftConf") {
-    val read = """GraftConf\.(?:long|int|bool|bytes|choice|string)\([^"]*"(graft\.[\w.]+)"""".r
+    val read = """GraftConf\.(?:long|int|bool|bytes|string)\([^"]*"(graft\.[\w.]+)"""".r
     val keys = mainSources.flatMap { case (_, t) => read.findAllMatchIn(t).map(_.group(1)) }.toSet
     val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
     val documented = """(?m)^\| `(graft\.[\w.]+)` \|""".r

@@ -1,37 +1,9 @@
 package graft
 
-import graft.operators.Skew
 import graft.sources.{GraftCatalog, Loader}
-import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class SkewAndCsvSpec extends SparkTestBase {
-  import spark.implicits._
-
-  test("saltedEquiJoin equals plain join on skewed data") {
-    // 90% of fact rows share one hot key
-    val fact = (1 to 2000).map(i =>
-      (if (i % 10 == 0) i.toLong % 7 else 42L, s"p$i")).toDF("k", "payload")
-    val dim = Seq((42L, "hot"), (0L, "a"), (1L, "b"), (2L, "c"),
-      (3L, "d"), (4L, "e"), (5L, "f"), (6L, "g")).toDF("k", "label")
-
-    val plain = fact.join(dim, "k").select("k", "payload", "label")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    val salted = Skew.saltedEquiJoin(fact, dim, "k", buckets = 8)
-      .select("k", "payload", "label")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(salted == plain)
-    assert(salted.count(_._1 == 42L) == 1800)
-  }
-
-  test("saltedCountDistinct is exact") {
-    val df = (1 to 5000).map(i => (i % 3L, s"v${i % 117}")).toDF("k", "v")
-    val expect = df.groupBy("k").agg(countDistinct("v").as("n"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCountDistinct(df, "k", "v", buckets = 16)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(salted == expect)
-  }
 
   test("CSV batch load: inferred types fold onto the lattice") {
     val tmp = Files.createTempDirectory("graft-csv")

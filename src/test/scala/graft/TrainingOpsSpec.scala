@@ -14,13 +14,6 @@ class TrainingOpsSpec extends SparkTestBase {
   private def docsDf(rows: (Long, String)*) =
     rows.toDF("doc_id", "text")
 
-  test("exactGroups groups identical texts under the min id") {
-    val df = docsDf(1L -> "aa bb", 2L -> "cc dd", 3L -> "aa bb", 4L -> "aa bb")
-    val g = Dedup.exactGroups(df, "doc_id", "text")
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(g == Map(1L -> 1L, 2L -> 2L, 3L -> 1L, 4L -> 1L))
-  }
-
   test("minhash finds planted near-duplicates and skips unrelated docs") {
     val base = (0 until 60).map(i => s"tok$i").mkString(" ")
     val nearDup = (0 until 60).map(i => if (i == 30) "CHANGED" else s"tok$i").mkString(" ")
@@ -97,19 +90,6 @@ class TrainingOpsSpec extends SparkTestBase {
       spark.conf.unset("graft.cc.localEdgeLimit")
       spark.conf.unset("graft.cc.contractRounds")
     }
-  }
-
-  test("minhashDedupGroups closes transitive near-dup chains") {
-    // A~B (edit at 15), B~C (edits at 15 and 45): A and C share only
-    // ~half their shingles, so the single-pass verdict would split them
-    val mk = (edits: Set[Int]) => (0 until 60)
-      .map(i => if (edits(i)) s"ED$i" else s"tok$i").mkString(" ")
-    val df = docsDf(1L -> mk(Set.empty), 2L -> mk(Set(15)), 3L -> mk(Set(15, 45)),
-      9L -> (0 until 60).map(i => s"zzz$i").mkString(" "))
-    val groups = Dedup.minhashDedupGroups(df, "doc_id", "text",
-      shingleK = 5, numHashes = 128, bands = 64, threshold = 0.4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 9L -> 9L), s"got $groups")
   }
 
   test("minhash est_jaccard approximates exact shingle jaccard") {
@@ -342,29 +322,6 @@ class TrainingOpsSpec extends SparkTestBase {
       "label", centroids, q, "qid", "qvec", "qlab", k = 10, nProbe = nCells)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(4))).toSet
     assert(ivf == rows.toSet, "full-probe IVF must equal brute force")
-  }
-
-  test("k-means refinement keeps IVF exact-per-cell and high recall") {
-    val dir = "/root/testdata/sf0.01"
-    val e = Tables.load(spark, dir, "embeddings")
-    val q = e.filter(col("vec_id") < 10).select(
-      col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val brute = Similarity.bruteForceTopK(e, "vec_id", "embedding", q, "qid", "qvec", 10)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val centroids = Similarity.kmeansCentroids(e, "vec_id", "embedding",
-      stride = 50, iters = 2)
-    assert(centroids.count() == 10)
-    val assigned = Similarity.ivfAssign(
-      e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding")),
-      "vec_id", "embedding", centroids)
-    val ivf = Similarity.ivfTopK(assigned, "vec_id", "embedding", centroids,
-      q, "qid", "qvec", 10, nProbe = 3)
-      .select("query_id", "neighbor_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(ivf.size == brute.size)
-    val recall = (brute intersect ivf).size.toDouble / brute.size
-    assert(recall >= 0.5, s"k-means IVF recall $recall")
   }
 
   test("IVF-PQ: exhaustive codebook reproduces exact L2 ranking; real codebook keeps recall") {
@@ -628,20 +585,20 @@ class TrainingOpsSpec extends SparkTestBase {
     assert(out == Map(1L -> "en", 2L -> "de", 3L -> "es", 4L -> "fr"))
   }
 
-  test("quality signals and score are sane and bounded") {
+  test("quality signals are sane and bounded") {
     val df = docsDf(1L -> "the quick brown fox jumps over the lazy dog",
       2L -> "@@@ ### !!! $$$")
     val rows = df.select(col("doc_id") +:
-      TextFunctions.qualitySignals(col("text")).map { case (n, c) => c.as(n) } :+
-      TextFunctions.qualityScore(col("text")).as("score"): _*)
+      TextFunctions.qualitySignals(col("text")).map { case (n, c) => c.as(n) }: _*)
       .collect().map(r => r.getLong(0) -> r).toMap
     val good = rows(1L); val junk = rows(2L)
     assert(good.getAs[Long]("n_words") == 9)
     assert(good.getAs[Double]("alpha_ratio") > 0.7)
     assert(junk.getAs[Double]("alpha_ratio") == 0.0)
-    assert(good.getAs[Double]("score") > junk.getAs[Double]("score"))
     Seq(good, junk).foreach { r =>
-      val s = r.getAs[Double]("score"); assert(s >= 0.0 && s <= 1.0)
+      Seq("alpha_ratio", "stopword_ratio").foreach { n =>
+        val v = r.getAs[Double](n); assert(v >= 0.0 && v <= 1.0, s"$n = $v")
+      }
     }
   }
 

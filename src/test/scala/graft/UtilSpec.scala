@@ -2,24 +2,10 @@ package graft
 
 import graft.functions.{NativeExpressions, Snowflake, Ulid}
 import graft.query.QueryService
-import graft.util.Sql
 
-/** SQL quoting (reference stringbuffer_test.go cases), id generators,
-  * and the distributed snowflake expression. */
+/** Query cleaning, id generators, and the distributed snowflake
+  * expression. */
 class UtilSpec extends SparkTestBase {
-
-  test("Sql.ident quotes iff required (reference test vectors)") {
-    assert(Sql.ident("col") == "col")
-    assert(Sql.ident("tbl.col") == "\"tbl.col\"")
-    assert(Sql.ident("c\"l") == "\"c\"\"l\"")
-    assert(Sql.ident("_x") == "\"_x\"") // must start with a letter
-    assert(Sql.ident("a1_b") == "a1_b")
-  }
-
-  test("Sql.string single-quotes with '' escaping") {
-    assert(Sql.string("str") == "'str'")
-    assert(Sql.string("s'r") == "'s''r'")
-  }
 
   test("cleanQuery trims whitespace and one trailing semicolon") {
     assert(QueryService.cleanQuery("  select 1 ;  ") == "select 1")
@@ -44,31 +30,17 @@ class UtilSpec extends SparkTestBase {
       Ulid.make(2L, Array.fill[Byte](10)(0)))
   }
 
-  /** Run `body` on a new session over the shared SparkContext, built
-    * with [[graft.functions.GraftExtensions]]. `withExtensions`
-    * exercises the same injection hook as the
-    * `spark.sql.extensions=graft.functions.GraftExtensions` conf; the
-    * conf form is a STATIC setting a cluster supplies at boot, which a
-    * test sharing an already-running SparkContext cannot. */
-  private def withExtendedSession(body: org.apache.spark.sql.SparkSession => Unit): Unit = {
-    import org.apache.spark.sql.SparkSession
-    spark // force the shared session (and its SparkContext) first
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-    val extended = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new graft.functions.GraftExtensions())
-      .getOrCreate()
-    try {
-      assert(extended ne spark, "must be a new session over the same context")
-      body(extended)
-    } finally {
-      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
-      SparkSession.setActiveSession(spark); SparkSession.setDefaultSession(spark)
-    }
+  /** Run `body` on a new session over the shared SparkContext with
+    * graft's functions registered, as `QueryService` registers them on
+    * the session it plans on. */
+  private def withGraftFunctions(body: org.apache.spark.sql.SparkSession => Unit): Unit = {
+    val extended = spark.newSession()
+    graft.functions.GraftExtensions.register(extended)
+    body(extended)
   }
 
   test("registered SQL functions: cosine_sim / simhash64 / rolling_fingerprint") {
-    withExtendedSession { ext =>
+    withGraftFunctions { ext =>
       val cos = ext.sql(
         "select cosine_sim(array(1.0D, 0.0D, 1.0D), array(1.0D, 1.0D, 0.0D)) as c")
         .collect().head.getDouble(0)
@@ -125,7 +97,7 @@ class UtilSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects native functions into a fresh session") {
-    withExtendedSession { ext =>
+    withGraftFunctions { ext =>
       val c = ext.sql(
         "select cosine_sim(array(3.0d, 4.0d), array(3.0d, 4.0d)) as c")
         .head.getDouble(0)
