@@ -3,22 +3,23 @@ package graft.control
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Blob storage seam (reference: pkg/storage/blobstore/blobstore.go —
-  * Upload/Download/Delete over memory/S3/GCS). On a cluster, Spark's
-  * Hadoop FS layer makes s3a:// and gs:// paths transparent, so the
-  * local implementation is all the test deployment needs; the trait is
-  * the boundary a cloud impl would plug into. */
+  * Upload/Download/Delete over memory/S3/GCS). graft's seam is
+  * upload-only: the one caller is the server's rotation hook, which
+  * copies each rotated NDJSON file here; the loader reads the local
+  * sink file, so nothing downloads or deletes a blob. On a cluster,
+  * Spark's Hadoop FS layer makes s3a:// and gs:// paths transparent, so
+  * the local implementation is all the test deployment needs; the trait
+  * is the boundary a cloud impl would plug into. */
 trait BlobStore {
   def upload(key: String, localFile: Path): Unit
-  def download(key: String, localFile: Path): Unit
-  def delete(key: String): Unit
 }
 
 /** Hadoop-FS-backed blob store: the root is any URI Spark's Hadoop
   * layer resolves — s3a://bucket/prefix, gs://, hdfs://, file:// —
   * mirroring the reference's S3 store (pkg/storage/blobstore/s3/s3.go:
-  * Upload=PutObject, Download=GetObject, Delete=DeleteObject). The
-  * filesystem client is resolved once from the scheme and reused, the
-  * way an S3 client is held for the bucket's lifetime. */
+  * Upload=PutObject). The filesystem client is resolved once from the
+  * scheme and reused, the way an S3 client is held for the bucket's
+  * lifetime. */
 final class HadoopBlobStore(rootUri: String,
                             conf: org.apache.hadoop.conf.Configuration)
     extends BlobStore {
@@ -36,13 +37,6 @@ final class HadoopBlobStore(rootUri: String,
   override def upload(key: String, localFile: Path): Unit =
     fs.copyFromLocalFile(false /*delSrc*/, true /*overwrite*/,
       new HPath(localFile.toUri), keyPath(key))
-
-  override def download(key: String, localFile: Path): Unit = {
-    Files.createDirectories(localFile.getParent)
-    fs.copyToLocalFile(false, keyPath(key), new HPath(localFile.toUri), true)
-  }
-
-  override def delete(key: String): Unit = { fs.delete(keyPath(key), false); () }
 }
 
 final class LocalBlobStore(root: String) extends BlobStore {
@@ -59,11 +53,4 @@ final class LocalBlobStore(root: String) extends BlobStore {
     Files.createDirectories(dst.getParent)
     Files.copy(localFile, dst, StandardCopyOption.REPLACE_EXISTING)
   }
-
-  override def download(key: String, localFile: Path): Unit = {
-    Files.createDirectories(localFile.getParent)
-    Files.copy(keyPath(key), localFile, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  override def delete(key: String): Unit = Files.deleteIfExists(keyPath(key))
 }

@@ -34,7 +34,7 @@ object IngestPack {
       ingest.insert("db", "ev", """{"user": "alice", "event": "click"}""")
       ingest.insert("db", "ev",
         """[{"user": "bob", "event": "click"}, {"user": "alice", "event": "view"}]""")
-      sink.flushAll().foreach(loader.consume)
+      sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
       catalog.read("db", "ev")
         .groupBy(col("user").as("user_name"))
         .agg(count(lit(1)).as("n"))
@@ -55,7 +55,7 @@ object IngestPack {
       ingest.insert("db", "docs",
         """{"user": "u1", "tags": ["a", "b"], "scores": [1, 2]}""",
         Ingest.FlattenMode.Vertical)
-      sink.flushAll().foreach(loader.consume)
+      sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
       catalog.read("db", "docs").select(
         col("user").as("user_name"),
         col("tags").as("tag"),
@@ -75,7 +75,7 @@ object IngestPack {
       val (catalog, loader, sink, ingest) = pipeline(s)
       ingest.insert("db", "mt", """{"k": "v", "items": [{"x": 1}, {"x": 2}]}""",
         Ingest.FlattenMode.MultiTable)
-      sink.flushAll().foreach(loader.consume)
+      sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
       val parent = catalog.read("db", "mt").select(col("id"), col("k"))
       val items = catalog.read("db", "items")
       items.join(parent, items("mt_id") === parent("id"))
@@ -92,9 +92,9 @@ object IngestPack {
       val (catalog, loader, sink, ingest) = pipeline(s)
       ingest.insert("db", "t",
         """[{"d": "x", "a": 1}, {"d": 3, "a": 2}]""")
-      sink.flushAll().foreach(loader.consume)
+      sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
       ingest.insert("db", "t", """{"d": "y", "f": true}""")
-      sink.flushAll().foreach(loader.consume)
+      sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
       // f inferred bool (alone in its batch); render as string for the
       // constant oracle
       catalog.read("db", "t").select(col("d"), col("f").cast("string").as("f"))

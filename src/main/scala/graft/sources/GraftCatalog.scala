@@ -37,7 +37,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
   * client-side copy+delete. The catalog therefore never relies on a
   * multi-file rename for correctness:
   *
-  *  - '''Table rewrites (compact/cluster) commit via a generation
+  *  - '''Table rewrites ([[compact]]) commit via a generation
   *    pointer''', not a directory swap: the rewrite job writes a
   *    complete new `data-<n+1>` directory, then commits by rewriting
   *    the single `gen.json` object to name it — one atomic PUT. There
@@ -56,13 +56,12 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
   *    atomically by the generation flip) and (b) append files whose
   *    key has a published marker. A crash between file publish and
   *    marker PUT leaves the partial batch invisible — to queries and
-  *    to the [[compact]]/[[cluster]] rewrites, which read through
+  *    to the [[compact]] rewrite, which reads through
   *    [[read]] — until the queue redelivers and the idempotent
   *    republish completes it; a dead-lettered batch stays invisible.
   *
-  * Scale: a table is a plain parquet dir — at warehouse scale the same
-  * layout partitions/buckets by any column via `df.write.partitionBy`;
-  * nothing here assumes a single file or a single node.
+  * Layout: a table is one flat parquet dir per generation; nothing here
+  * assumes a single file or a single node.
   */
 final class GraftCatalog(val spark: SparkSession, val root: String) {
 
@@ -73,8 +72,6 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     new HPath(new HPath(new HPath(root), db), table)
   private def schemaFile(db: String, table: String): HPath =
     new HPath(tableDir(db, table), "schema.json")
-  private def partitionFile(db: String, table: String): HPath =
-    new HPath(tableDir(db, table), "partition.json")
   private def genFile(db: String, table: String): HPath =
     new HPath(tableDir(db, table), "gen.json")
   private def statsFile(db: String, table: String): HPath =
@@ -194,30 +191,19 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   }
 
 
-  /** Recursive .parquet listing (hive-partitioned layouts nest), walked
-    * with `listStatus`. The located-status iterator builds a
+  /** The dir's .parquet files (tables are flat), listed with one
+    * `listStatus`. The located-status iterator builds a
     * `LocatedFileStatus` per file, which copies its permissions — on a
     * local FS without native Hadoop IO that forks one `stat` process per
-    * file (measured: 300 files 894 ms, against 7 ms for this walk). */
+    * file (measured: 300 files 894 ms, against 7 ms for a plain list). */
   private def parquetStatuses(dir: HPath): Seq[FileStatus] = {
     val fs = fsOf(dir)
-    def walk(d: HPath): Seq[FileStatus] = fs.listStatus(d).toSeq.flatMap { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
-      else Nil
-    }
-    if (fs.exists(dir)) walk(dir) else Nil
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
 
   private def parquetFiles(dir: HPath): Seq[HPath] = parquetStatuses(dir).map(_.getPath)
-
-  /** `child`'s path relative to `base` ("" when equal) — Hadoop Path
-    * has no relativize; both sides are qualified through the same FS
-    * so the URI prefix strip is exact. */
-  private def relativeTo(base: HPath, child: HPath): String = {
-    val fs = fsOf(base)
-    fs.makeQualified(base).toUri.relativize(fs.makeQualified(child).toUri).getPath
-  }
 
   /** Seed column the reference creates every table with
     * (pkg/destinations/duckdb/insert.go:72-76). */
@@ -247,8 +233,8 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   def addColumns(db: String, table: String, types: Map[String, String]): Unit = synchronized {
     ensureTable(db, table)
     // fail loud on a type outside the lattice — the sidecar reader
-    // would otherwise silently coerce it to string (and e.g. range-
-    // cluster numerically-intended keys in lexicographic order)
+    // would otherwise silently coerce it to string (and e.g. compare
+    // numerically-intended values in lexicographic order)
     val bad = types.collect {
       case (n, t) if !Set(TypeLattice.String, TypeLattice.Int,
         TypeLattice.Float, TypeLattice.Bool).contains(t) => s"$n: $t"
@@ -289,76 +275,6 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
 
   private def genNumber(dirName: String): Int =
     if (dirName == "data") 0 else dirName.stripPrefix("data-").toInt
-
-  /** Hive-style directory partitioning for a table. Must be declared
-    * while the table is still empty — the layout is fixed after the
-    * first write (same rule as every warehouse). Partition columns
-    * must already exist in the schema. At 100 TB this is what turns
-    * `WHERE lang = 'en'` into a directory prune instead of a scan:
-    * Spark's partition discovery + PartitionFilters skip whole
-    * subtrees before any parquet footer is opened. */
-  def setPartitioning(db: String, table: String, cols: Seq[String]): Unit = synchronized {
-    ensureTable(db, table)
-    val have = readSchemaSeq(db, table).map(_._1).toSet
-    require(cols.forall(have.contains),
-      s"partition columns must exist in schema: ${cols.filterNot(have.contains)}")
-    require(parquetFiles(dataDir(db, table)).isEmpty, "cannot re-partition a non-empty table")
-    writeString(partitionFile(db, table), cols.map(quote).mkString("[", ",", "]"))
-  }
-
-  def partitioningOf(db: String, table: String): Seq[String] = {
-    import graft.functions.JValue, graft.functions.JValue._
-    if (!exists(partitionFile(db, table))) Nil
-    else readJson(partitionFile(db, table)) match {
-      case JArr(items) => items.collect { case JStr(s) => s }
-      case other => throw new IllegalStateException(s"bad partition sidecar: $other")
-    }
-  }
-
-  // ---- clustering (sort-order data skipping) ----------------------
-
-  private def clusterFile(db: String, table: String): HPath =
-    new HPath(tableDir(db, table), "cluster.json")
-
-  /** Declare a clustering (sort) order for the table. Unlike
-    * partitioning this is a LAYOUT property, not a path property — it
-    * takes effect at the next [[cluster]] rewrite (and [[compact]]
-    * preserves it), so it can be set on a non-empty table. */
-  def setClustering(db: String, table: String, cols: Seq[String]): Unit = synchronized {
-    ensureTable(db, table)
-    val have = readSchemaSeq(db, table).map(_._1).toSet
-    require(cols.forall(have.contains),
-      s"cluster columns must exist in schema: ${cols.filterNot(have.contains)}")
-    writeString(clusterFile(db, table), cols.map(quote).mkString("[", ",", "]"))
-  }
-
-  def clusteringOf(db: String, table: String): Seq[String] = {
-    import graft.functions.JValue, graft.functions.JValue._
-    if (!exists(clusterFile(db, table))) Nil
-    else readJson(clusterFile(db, table)) match {
-      case JArr(items) => items.collect { case JStr(s) => s }
-      case other => throw new IllegalStateException(s"bad cluster sidecar: $other")
-    }
-  }
-
-  /** Cluster rewrite — the data-skipping maintenance op. Rewrites the
-    * data dir range-partitioned + sorted on the table's clustering
-    * columns, so every output file (and every parquet row group inside
-    * it) covers a narrow, disjoint key range. Selective scans then
-    * skip whole row groups on footer min/max stats — at 100 TB this is
-    * the difference between touching ~1/nFiles of the table and
-    * touching all of it, with zero layout knowledge in the query. The
-    * sort itself is one distributed range-shuffle + per-partition
-    * sort (`repartitionByRange` + `sortWithinPartitions`), never a
-    * global single-task sort. Commits via the generation pointer
-    * (class doc). Returns (files before, files after). */
-  def cluster(db: String, table: String, sortCols: Seq[String] = Nil,
-              targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    val cols0 = if (sortCols.nonEmpty) sortCols else clusteringOf(db, table)
-    require(cols0.nonEmpty, "no cluster columns: pass sortCols or setClustering first")
-    if (sortCols.nonEmpty) setClustering(db, table, sortCols)
-    rewriteData(db, table, targetFileBytes, Some(cols0))
-  }
 
   // ---- per-table ingest dedup policy ------------------------------
 
@@ -435,8 +351,8 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * Each call therefore writes (mode=overwrite) into its own
     * `.stage/<key>` directory — committer isolation — then renames the
     * part files into the current data generation as
-    * `<key>-<n>.parquet` (partition subdirs preserved) and commits the
-    * batch with a `commits/<key>.json` marker (see class doc). With
+    * `<key>-<n>.parquet` and commits the batch with a
+    * `commits/<key>.json` marker (see class doc). With
     * the default random key, concurrent appends can never collide.
     * Queue-driven callers pass their QUEUE JOB ID as `jobKey`: the
     * publish step first deletes any `<key>-*` files an earlier attempt
@@ -445,8 +361,8 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     *
     * The Spark write job runs unsynchronized (concurrent loads are the
     * point); only the driver-side publish takes the per-table lock, so
-    * a publish can never interleave with a [[compact]]/[[cluster]]
-    * rewrite IN THIS DRIVER — the publish resolves the generation
+    * a publish can never interleave with a [[compact]] rewrite IN
+    * THIS DRIVER — the publish resolves the generation
     * under the lock and lands in whichever generation is current
     * after any concurrent rewrite commits. Cross-driver, serialize
     * rewrites against ingest through the control-plane queue (same
@@ -472,10 +388,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       case None => java.util.UUID.randomUUID().toString.replace("-", "")
     }
     val stage = new HPath(new HPath(tableDir(db, table), ".stage"), key)
-    val w = projected.write.mode("overwrite")
-    val parts = partitioningOf(db, table)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .parquet(stage.toString)
+    projected.write.mode("overwrite").parquet(stage.toString)
     val footerRows = lockFor(db, table).synchronized {
       publishStage(stage, dataDir(db, table), db, table, key)
     }
@@ -509,14 +422,11 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       .foreach(p => fs.delete(p, false))
     val staged = parquetFiles(stage).sortBy(_.toString)
     val published = staged.zipWithIndex.map { case (src, i) =>
-      val rel = relativeTo(stage, src.getParent)
-      val destDir = if (rel.isEmpty) data else new HPath(data, rel)
-      fs.mkdirs(destDir)
-      val dest = new HPath(destDir, s"$key-$i.parquet")
+      val dest = new HPath(data, s"$key-$i.parquet")
       fs.delete(dest, false)
       if (!fs.rename(src, dest))
         throw new java.io.IOException(s"publish rename failed: $src -> $dest")
-      relativeTo(data, dest)
+      dest.getName
     }
     fs.mkdirs(commitsDir(db, table))
     // Measured stats: the batch's footer totals ride IN the marker, so
@@ -559,7 +469,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
   // that finds the fingerprint stale (another DRIVER appended; a
   // crash landed between marker and stats; a concurrent write lost an
   // increment) recomputes from the markers and heals the sidecar in
-  // place. Any rewrite ([[compact]]/[[cluster]]) resets a clean base
+  // place. A rewrite ([[compact]]) resets a clean base
   // from the new generation's footers from scratch.
 
   /** (rows, decodedBytes) summed over the files' parquet footers.
@@ -700,7 +610,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * store that is the read path's dominant metadata cost. One
     * `getFileStatus` mtime probe replaces the LIST when nothing
     * changed. Invalidation is belt-and-braces: driver-local writers
-    * ([[publishStage]], [[rewriteData]]) drop the entry directly;
+    * ([[publishStage]], [[compact]]) drop the entry directly;
     * cross-driver writers are caught by the mtime probe. The cache is
     * only SERVED when the recorded mtime is older than the moment we
     * listed by at least `graft.commits.mtimeSlackMs` (default 2000 ms)
@@ -739,8 +649,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     keys
   }
 
-  /** Read the table under its full sidecar schema (partition columns
-    * resolve from the directory layout by name). Batch-atomic: rewrite
+  /** Read the table under its full sidecar schema. Batch-atomic: rewrite
     * output (`part-*`, committed wholesale by the generation flip) plus
     * only marker-committed append batches (class doc). */
   def read(db: String, table: String): DataFrame = read(db, table, snapshot(db, table))
@@ -786,58 +695,24 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
     * reads) dominates query time. One distributed job rewrites the
     * data into a NEW generation directory, then commits it with one
     * atomic `gen.json` write (class doc) — no rename window on any
-    * store. Returns (files before, files after). */
+    * store. Holds the per-table lock for the whole rewrite so no
+    * publish in this driver can land in the old generation after the
+    * rewrite job has planned its input (such rows would vanish with the
+    * old generation's cleanup). Returns (files before, files after). */
   def compact(db: String, table: String,
-              targetFileBytes: Long = 128L << 20): (Int, Int) = {
-    // a compaction of a clustered table must not destroy its sort
-    // order — route through the same rewrite with the stored columns
-    val cl = clusteringOf(db, table)
-    rewriteData(db, table, targetFileBytes, if (cl.nonEmpty) Some(cl) else None)
-  }
-
-  /** Shared rewrite behind [[compact]] and [[cluster]]: one
-    * distributed job into ~targetFileBytes parts (range-sorted when
-    * clusterCols is set) in a fresh generation dir, then the atomic
-    * pointer flip. Holds the per-table lock for the whole rewrite so
-    * no publish in this driver can land in the old generation after
-    * the rewrite job has planned its input (such rows would vanish
-    * with the old generation's cleanup). */
-  private def rewriteData(db: String, table: String, targetFileBytes: Long,
-                          clusterCols: Option[Seq[String]]): (Int, Int) =
+              targetFileBytes: Long = 128L << 20): (Int, Int) =
     lockFor(db, table).synchronized {
       val tdir = tableDir(db, table)
       val fs = fsOf(tdir)
       val cur = dataDir(db, table)
       val parts = parquetStatuses(cur)
-      if (parts.isEmpty) return (0, 0)
-      if (parts.length <= 1 && clusterCols.isEmpty) return (parts.length, parts.length)
+      if (parts.length <= 1) return (parts.length, parts.length)
       val totalBytes = parts.map(_.getLen).sum
       val nOut = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
       val nextName = s"data-${genNumber(cur.getName) + 1}"
       val next = new HPath(tdir, nextName)
       fs.delete(next, true)
-      val partCols = partitioningOf(db, table)
-      val rewrite = (clusterCols, partCols) match {
-        // clustered: disjoint key ranges per file, rows sorted inside —
-        // row-group min/max stats become selective
-        case (Some(cc), pc) if pc.isEmpty =>
-          read(db, table).repartitionByRange(nOut, cc.map(col): _*)
-            .sortWithinPartitions(cc.map(col): _*)
-            .write.mode("overwrite")
-        case (Some(cc), pc) =>
-          // hive-partitioned AND clustered: cluster within partition dirs
-          read(db, table).repartitionByRange(nOut, (pc ++ cc).map(col): _*)
-            .sortWithinPartitions((pc ++ cc).map(col): _*)
-            .write.mode("overwrite").partitionBy(pc: _*)
-        // partitioned: shuffle rows to their partition dirs so each dir
-        // compacts to ~one part; flat: straight repartition(nOut)
-        case (None, pc) if pc.nonEmpty =>
-          read(db, table).repartition(nOut, pc.map(col): _*)
-            .write.mode("overwrite").partitionBy(pc: _*)
-        case _ =>
-          read(db, table).repartition(nOut).write.mode("overwrite")
-      }
-      rewrite.parquet(next.toString)
+      read(db, table).repartition(nOut).write.mode("overwrite").parquet(next.toString)
       // COMMIT: one atomic object write flips every future read to the
       // new generation
       writeString(genFile(db, table), s"""{"dir":${quote(nextName)}}""")
@@ -1198,7 +1073,7 @@ final class GraftCatalog(val spark: SparkSession, val root: String) {
       : (GraftCatalog.ViewStamp, GraftCatalog.Snapshot) = {
     def text(p: HPath) = if (exists(p)) Some(readString(p)) else None
     val sidecars =
-      Seq(schemaFile _, genFile _, partitionFile _, statsFile _).map(f => text(f(db, table)))
+      Seq(schemaFile _, genFile _, statsFile _).map(f => text(f(db, table)))
     val snap = snapshot(db, table)
     (GraftCatalog.ViewStamp(db, sidecars, snap.committed, snap.files.map(st =>
       (st.getPath.toString, st.getLen, st.getModificationTime))), snap)
@@ -1271,7 +1146,7 @@ object GraftCatalog {
                                     committed: Set[String], files: Seq[FileStatus])
 
   /** Everything [[GraftCatalog.read]] of one table depends on: its
-    * sidecars (schema, generation pointer, partitioning, stats), the
+    * sidecars (schema, generation pointer, stats), the
     * committed keys and the files the read keeps. Published files are
     * never rewritten in place (a retry republishes under a fresh
     * mtime), so (path, length, mtime) pins the listing. Equal stamps

@@ -34,14 +34,15 @@ final class JdbcDestination(spark: SparkSession, url: String) {
     * form (JDBC metadata says which way it folds) so quoted-create ==
     * unquoted-reference. */
   private def foldIdentifiers(df: DataFrame): DataFrame = {
-    val (upper, lower) = withConn { c =>
-      (c.getMetaData.storesUpperCaseIdentifiers,
-        c.getMetaData.storesLowerCaseIdentifiers)
-    }
-    if (upper) df.toDF(df.columns.map(_.toUpperCase).toIndexedSeq: _*)
-    else if (lower) df.toDF(df.columns.map(_.toLowerCase).toIndexedSeq: _*)
-    else df
+    val fold = withConn(c => folding(c.getMetaData))
+    df.toDF(df.columns.map(fold).toIndexedSeq: _*)
   }
+
+  /** The engine's case folding for unquoted identifiers. */
+  private def folding(md: java.sql.DatabaseMetaData): String => String =
+    if (md.storesUpperCaseIdentifiers) _.toUpperCase
+    else if (md.storesLowerCaseIdentifiers) _.toLowerCase
+    else identity
 
   def append(table: String, df: DataFrame): Unit = {
     foldIdentifiers(df).write.mode("append").format("jdbc")
@@ -77,13 +78,20 @@ final class JdbcDestination(spark: SparkSession, url: String) {
     * column missing from an existing table is added with a portable
     * SQL type; Spark's JDBC writer then inserts by column NAME, so the
     * engine null-fills the rest. No-op when the table doesn't exist
-    * yet (first append creates it). */
+    * yet (first append creates it). Each new name is folded the way
+    * [[foldIdentifiers]] folds it for the writer, then quoted with the
+    * engine's identifier quote, so a JSON key that is no bare SQL
+    * identifier (`my col`) adds the column the writer inserts into. */
   def ensureColumns(table: String, schema: org.apache.spark.sql.types.StructType): Unit = {
     if (!tableExists(table)) return
     val existing = columns(table).map(_._1).toSet
     val missing = schema.fields.filterNot(f => existing.contains(f.name.toLowerCase))
     if (missing.isEmpty) return
     withConn { c =>
+      val md = c.getMetaData
+      val fold = folding(md)
+      val q = md.getIdentifierQuoteString.trim
+      def ident(name: String) = q + fold(name).replace(q, q + q) + q
       missing.foreach { f =>
         val sqlType = f.dataType match {
           case org.apache.spark.sql.types.LongType |
@@ -94,72 +102,10 @@ final class JdbcDestination(spark: SparkSession, url: String) {
           case _ => "VARCHAR(32000)"
         }
         val st = c.createStatement()
-        try st.executeUpdate(s"ALTER TABLE $table ADD COLUMN ${f.name} $sqlType")
+        try st.executeUpdate(s"ALTER TABLE $table ADD COLUMN ${ident(f.name)} $sqlType")
         finally st.close()
       }
     }
-  }
-
-  /** The ClickHouse-native-batch equivalent (SURVEY "missing" #1,
-    * reference insert.go:203-276 PrepareBatch/Append/Send): Spark's
-    * JDBC sink already writes each partition through ONE
-    * PreparedStatement with addBatch/executeBatch — the same wire
-    * shape — so the native path here is the `batchsize` knob, not a
-    * custom protocol. 10k rows/round-trip against the reference's
-    * unbounded single batch: bounded memory per executor, N partitions
-    * writing in parallel vs the reference's one. */
-  def appendBatched(table: String, df: DataFrame, batchSize: Int = 10000): Unit =
-    foldIdentifiers(df).write.mode("append").format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .option("batchsize", batchSize.toString).save()
-
-  /** Backend-native bulk load (SURVEY "missing" #1): stage the batch
-    * as parallel NDJSON parts on the backend's blob store, then issue
-    * ONE native ingest statement — Redshift `COPY ... MANIFEST` or
-    * BigQuery `LOAD DATA` — through `exec` (defaults to this
-    * destination's JDBC connection; tests pass a recorder). Per-batch
-    * warehouse work is one statement regardless of rows or executors.
-    * See [[BulkLoad]] for the statement builders and the zero-egress
-    * test boundary. */
-  def bulkAppend(table: String, df: DataFrame, dialect: String,
-                 stagingUri: String, credentials: String = "",
-                 schemaName: String = "public",
-                 exec: Option[String => Unit] = None): BulkLoad.Staged = {
-    // `table` is both a staging PATH component and an identifier in
-    // the native statement — validate before either use (a name like
-    // `../x` or one carrying quotes/backticks is an escape on one
-    // surface or the other). Dots stay legal: BigQuery tables are
-    // dotted `project.dataset.table` paths.
-    require(table.nonEmpty && table.matches("[A-Za-z0-9_.$-]+") &&
-      !table.contains(".."), s"unsafe table name: $table")
-    val batchId = java.util.UUID.randomUUID().toString.replace("-", "")
-    val staged = BulkLoad.stage(df, stagingUri, table, batchId)
-    val stmt = dialect.toLowerCase match {
-      case "redshift" =>
-        BulkLoad.redshiftCopy(schemaName, table, staged.manifestUri, credentials)
-      case "bigquery" =>
-        val lattice = df.schema.fields.toSeq.map { f =>
-          f.name -> (f.dataType match {
-            case org.apache.spark.sql.types.LongType |
-                 org.apache.spark.sql.types.IntegerType => "int"
-            case org.apache.spark.sql.types.DoubleType |
-                 org.apache.spark.sql.types.FloatType => "float"
-            case org.apache.spark.sql.types.BooleanType => "bool"
-            case org.apache.spark.sql.types.TimestampType => "timestamp"
-            case _ => "string"
-          })
-        }
-        BulkLoad.bigqueryLoad(table, lattice, staged.partUris)
-      case other => throw new IllegalArgumentException(
-        s"no native bulk path for dialect '$other' — use append/appendBatched")
-    }
-    exec.getOrElse { sql: String =>
-      withConn { c =>
-        val st = c.createStatement()
-        try { st.execute(sql); () } finally st.close()
-      }
-    }.apply(stmt)
-    staged
   }
 
   private def withConn[A](f: java.sql.Connection => A): A = {

@@ -81,27 +81,4 @@ final class Loader(catalog: GraftCatalog,
     jd.append(table, df)
     df.count()
   }
-
-  /** Consume a rotated sink file end-to-end (the worker loop body). */
-  def consume(closed: NdjsonSink.ClosedFile): Long =
-    loadFile(closed.database, closed.table, closed.path)
-
-  /** CSV batch load (extension beyond the reference's NDJSON-only
-    * ingest): Spark infers physical types, they fold onto the same
-    * 4-type lattice, and the table evolves identically. */
-  def loadCsvFile(database: String, table: String, file: Path,
-                  header: Boolean = true): Long = {
-    val spark = catalog.spark
-    val inferred = spark.read
-      .option("header", header.toString)
-      .option("inferSchema", "true")
-      .csv(file.toString)
-    val types = inferred.schema.fields
-      .map(f => f.name -> TypeLattice.fromSparkType(f.dataType)).toMap
-    catalog.ensureTable(database, table)
-    catalog.addColumns(database, table, types)
-    val df = inferred.withColumn(catalog.RowIdColumn,
-      graft.functions.NativeExpressions.snowflake_id())
-    catalog.append(database, table, df)
-  }
 }

@@ -9,9 +9,12 @@ import scala.collection.mutable
   * (/root/reference/pkg/datasink/filesystem/filesystem.go): JSON lines
   * append to one open NDJSON file per (database, table); a file rotates
   * (closes) once it breaches maxBytes / maxRows / maxAgeSeconds; closed
-  * files are handed to a consumer (the reference uploads to a blob
-  * store and enqueues a load message — here the loader consumes them
-  * directly, same at-least-once contract).
+  * files are handed to `onRotate`. The reference uploads the file to a
+  * blob store and its worker downloads it to load; graft's server
+  * uploads a copy through the upload-only [[graft.control.BlobStore]]
+  * and enqueues a load job naming the LOCAL sink path, which the
+  * worker's `Loader.loadFile` reads (same at-least-once contract).
+  * Nothing deletes the sink file or the blob copy after the load.
   *
   * `tick()` is the 1 s rotation check made explicit (testable, no
   * background thread required); `start()` runs it on a scheduler for

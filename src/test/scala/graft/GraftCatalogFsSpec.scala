@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions.col
   * of catalog I/O through the Hadoop API; a java.nio catalog would
   * throw on the scheme'd root at the first sidecar write). Covers:
   * ingest → marker-committed publish → batch-atomic read
-  * → generation-pointer compact → post-compact append → cluster. */
+  * → generation-pointer compact → post-compact append → compact again. */
 class GraftCatalogFsSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -19,7 +19,7 @@ class GraftCatalogFsSpec extends SparkTestBase {
     "file://" + d.toString + "/warehouse"
   }
 
-  test("full cycle on a file:// Hadoop FS root: ingest, publish, read, compact, cluster") {
+  test("full cycle on a file:// Hadoop FS root: ingest, publish, read, compact, compact again") {
     val root = freshRoot()
     val cat = new GraftCatalog(spark, root)
     cat.ensureTable("db", "t")
@@ -62,16 +62,15 @@ class GraftCatalogFsSpec extends SparkTestBase {
     assert(fs.listStatus(new HPath(root + "/db/t/data-1"))
       .exists(_.getPath.getName.endsWith(".parquet")), "append lands in the live generation")
 
-    // cluster = second rewrite -> data-2, sorted layout, same rows
-    cat.setClustering("db", "t", Seq("k"))
-    cat.cluster("db", "t")
+    // a second compact is a second rewrite -> data-2, same rows
+    cat.compact("db", "t")
     assert(fs.exists(new HPath(root + "/db/t/data-2")))
     assert(!fs.exists(new HPath(root + "/db/t/data-1")))
     assert(cat.read("db", "t").orderBy("k").select("k").as[Long].collect().toSeq ==
       Seq(1L, 2L, 3L, 4L))
   }
 
-  test("strictCommits read hides a published-but-unmarked batch (crash before marker)") {
+  test("a read hides a published-but-unmarked batch (crash before marker)") {
     val root = freshRoot()
     val cat = new GraftCatalog(spark, root)
     cat.ensureTable("db", "t")
@@ -96,31 +95,5 @@ class GraftCatalogFsSpec extends SparkTestBase {
     cat.append("db", "t", Seq((2L, 20L)).toDF("__row_id", "k"),
       jobKey = Some("second"))
     assert(cat.read("db", "t").count() == 2)
-  }
-
-  test("hive-partitioned table on file:// root: partition prune + compact preserves layout") {
-    val root = freshRoot()
-    val cat = new GraftCatalog(spark, root)
-    cat.ensureTable("db", "p")
-    cat.addColumns("db", "p", Map("lang" -> "string", "n" -> "int"))
-    cat.setPartitioning("db", "p", Seq("lang"))
-    cat.append("db", "p", Seq((1L, "en", 1L), (2L, "de", 2L), (3L, "en", 3L))
-      .toDF("__row_id", "lang", "n"))
-    cat.append("db", "p", Seq((4L, "en", 4L)).toDF("__row_id", "lang", "n"))
-    val read = cat.read("db", "p")
-    assert(read.count() == 4)
-    // the partition column resolves from the directory layout
-    assert(read.filter(col("lang") === "en").count() == 3)
-    val plan = read.filter(col("lang") === "en").queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("lang"),
-      s"partition filter must prune directories:\n$plan")
-    val (b, a) = cat.compact("db", "p")
-    assert(b == 4 && a <= b, s"($b, $a)")
-    val byLang = cat.read("db", "p").groupBy("lang").count()
-      .as[(String, Long)].collect().toMap
-    assert(byLang == Map("en" -> 3L, "de" -> 1L))
-    val fs = new HPath(root).getFileSystem(spark.sessionState.newHadoopConf())
-    assert(fs.exists(new HPath(root + "/db/p/data-1/lang=en")),
-      "compaction preserves the hive layout in the new generation")
   }
 }

@@ -589,6 +589,34 @@ class GraftServerSpec extends SparkTestBase {
     } finally srv.stop()
   }
 
+  test("jdbc destination: a new key that is no bare identifier evolves the table") {
+    // ensureColumns runs only against an existing table, so the first
+    // batch creates t1 and the second adds `my col` with ALTER TABLE
+    val (srv, base) = newServer()
+    try {
+      val derby = Files.createTempDirectory("graft-jdbc").resolve("quotedb")
+      val reg = post(s"$base/api/destinations?api_key=adminkey",
+        s"""{"name": "quotedb", "type": "jdbc", "url": "jdbc:derby:$derby;create=true"}""")
+      assert(reg.statusCode() == 200, reg.body())
+      srv.addApiKey("quotekey", "quotedb")
+
+      assert(post(s"$base/api/data/insert/t1?api_key=quotekey", """{"a": 1}""")
+        .statusCode() == 200)
+      assert(srv.drain(), "first jdbc load must complete")
+      assert(post(s"$base/api/data/insert/t1?api_key=quotekey",
+        """{"a": 2, "my col": "x"}""").statusCode() == 200)
+      assert(srv.drain(), "the load that adds `my col` must complete")
+
+      val q = post(s"$base/api/data/query?api_key=quotekey&format=ndjson",
+        "select * from t1 order by a")
+      assert(q.statusCode() == 200, q.body())
+      val rows = q.body().split("\n").toSeq
+      assert(rows.length == 2, q.body())
+      assert(rows(0).contains("\"a\":1") && !rows(0).contains("my col"), q.body())
+      assert(rows(1).contains("\"a\":2") && rows(1).contains("\"my col\":\"x\""), q.body())
+    } finally srv.stop()
+  }
+
   test("jdbc destination: rich engine types (DECIMAL/DATE/TIMESTAMP/UUID) read and copy") {
     // The reference's ClickHouse reader coerces 16 wire types on read
     // (clickhouse/insert.go:148-201). The gateway analog: a table that

@@ -28,7 +28,7 @@ class IngestPipelineSpec extends SparkTestBase {
     assert(r.fullySucceeded && r.inserted == 1)
     ingest.insert("db1", "events_in", """[{"user": "bob", "event": "click"},
       {"user": "alice", "event": "view"}]""")
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
 
     assert(catalog.listTables("db1") == Seq("events_in"))
     val schema = catalog.schemaOf("db1", "events_in")
@@ -51,14 +51,14 @@ class IngestPipelineSpec extends SparkTestBase {
     val (catalog, loader, sink, ingest) = freshPipeline()
     ingest.insert("db", "t", """[{"a": 1, "b": 1.5, "c": true, "d": "x", "e": null},
       {"a": 2.5, "b": 2, "c": "yes", "d": 3, "e": null}]""")
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
     val s1 = catalog.schemaOf("db", "t")
     assert(s1("a") == "float" && s1("b") == "float" && s1("c") == "string" &&
       s1("d") == "string" && s1("e") == "string")
 
     // second batch: new column appears, existing columns keep types
     ingest.insert("db", "t", """{"a": 7, "f": 42}""")
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
     val s2 = catalog.schemaOf("db", "t")
     assert(s2("a") == "float" && s2("f") == "int")
 
@@ -91,7 +91,7 @@ class IngestPipelineSpec extends SparkTestBase {
     val (catalog, loader, sink, ingest) = freshPipeline(spark.newSession())
     ingest.insert("db", "msgs", """{"msg": "hello world", "n": 1}""")
     ingest.insert("db", "msgs", """{"msg": "with,comma \"q\"", "n": null}""")
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
     catalog.registerViews("db")
 
     val df = QueryService.query(catalog.spark, "select msg, n from msgs order by __row_id")
@@ -113,7 +113,7 @@ class IngestPipelineSpec extends SparkTestBase {
     val (catalog, loader, sink, ingest) = freshPipeline()
     ingest.insert("db", "docs", """{"k": "v", "items": [{"x": 1}, {"x": 2}]}""",
       Ingest.FlattenMode.Vertical)
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
     val v = catalog.read("db", "docs")
     assert(v.count() == 2)
     assert(v.columns.toSet.contains("__order_items"))
@@ -121,7 +121,7 @@ class IngestPipelineSpec extends SparkTestBase {
 
     ingest.insert("db", "mt", """{"k": "v", "items": [{"x": 1}, {"x": 2}]}""",
       Ingest.FlattenMode.MultiTable)
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
     assert(catalog.read("db", "mt").count() == 1)
     assert(catalog.read("db", "items").count() == 2)
     val fk = catalog.read("db", "items").select("mt_id").collect().map(_.getLong(0)).toSet
@@ -133,7 +133,7 @@ class IngestPipelineSpec extends SparkTestBase {
     val (catalog, loader, sink, ingest) = freshPipeline()
     (1 to 12).foreach { i =>
       ingest.insert("db", "tiny", s"""{"n": $i, "tag": "b$i"}""")
-      sink.flushAll().foreach(loader.consume) // one parquet part per batch
+      sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path)) // one parquet part per batch
     }
     val before = catalog.read("db", "tiny")
       .inputFiles.length
@@ -148,60 +148,12 @@ class IngestPipelineSpec extends SparkTestBase {
 
     // the compacted table is still a live append target
     ingest.insert("db", "tiny", """{"n": 13, "tag": "b13"}""")
-    sink.flushAll().foreach(loader.consume)
+    sink.flushAll().foreach(f => loader.loadFile(f.database, f.table, f.path))
     assert(catalog.read("db", "tiny").count() == 13)
 
     // compacting a single-part table is a no-op
     assert(catalog.compact("db", "tiny")._1 <= 2)
     assert(catalog.compact("db", "missing") == ((0, 0)))
-  }
-
-  test("partitioned tables: hive layout, pruning reaches the scan, compaction keeps it") {
-    import org.apache.spark.sql.functions.{col, sum => fsum}
-    val (catalog, _, _, _) = freshPipeline()
-    catalog.ensureTable("db", "part_t")
-    catalog.addColumns("db", "part_t", Map("lang" -> "string", "n" -> "int"))
-    catalog.setPartitioning("db", "part_t", Seq("lang"))
-
-    import spark.implicits._
-    (1 to 3).foreach { i =>
-      catalog.append("db", "part_t",
-        Seq(("en", i.toLong), ("de", i * 10L), ("fr", i * 100L))
-          .toDF("lang", "n").withColumn("__row_id", col("n")))
-    }
-
-    // layout is hive-style: lang=en/... directories
-    val allFiles = catalog.read("db", "part_t").inputFiles
-    val enFiles = allFiles.count(_.contains("lang=en"))
-    assert(enFiles > 0 && enFiles < allFiles.length)
-
-    // pruning happens in the planner (PartitionFilters), and the scan
-    // provably opens ONLY the en partition's files (numFiles metric)
-    val enOnly = catalog.read("db", "part_t").filter(col("lang") === "en")
-    val scan = enOnly.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.get
-    assert(scan.partitionFilters.nonEmpty, "PartitionFilters present in scan")
-    assert(enOnly.collect().map(_.getAs[Long]("n")).sum == 6L)
-    assert(scan.metrics("numFiles").value == enFiles,
-      s"scan opened ${scan.metrics("numFiles").value} files, en dir has $enFiles")
-
-    // declared-too-late and unknown-column partitioning are rejected
-    intercept[IllegalArgumentException] {
-      catalog.setPartitioning("db", "part_t", Seq("lang"))
-    }
-
-    // compaction preserves the layout and the pruning
-    val (was, now) = catalog.compact("db", "part_t")
-    assert(was >= 9 && now <= 3, s"$was -> $now (one-ish part per partition dir)")
-    val filesAfter = catalog.read("db", "part_t").inputFiles
-    assert(filesAfter.forall(f => f.contains("lang=")), "hive layout preserved")
-    val after = catalog.read("db", "part_t").filter(col("lang") === "de")
-    assert(after.collect().map(_.getAs[Long]("n")).sum == 60L)
-    val deScan = after.queryExecution.executedPlan.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-    }.get
-    assert(deScan.metrics("numFiles").value == filesAfter.count(_.contains("lang=de")))
   }
 
   test("two catalogs (two drivers) serialize dedup appends through the metastore lease") {
@@ -271,7 +223,7 @@ class IngestPipelineSpec extends SparkTestBase {
       "every writer's rows land exactly once")
   }
 
-  test("jobKey retry republishes instead of duplicating; partition dirs preserved") {
+  test("jobKey retry republishes instead of duplicating") {
     // The worker pool passes its (redelivery-stable) queue job id as
     // the append's idempotency key: a retried job deletes the files
     // its earlier attempt published before renaming the new ones in,
@@ -280,7 +232,6 @@ class IngestPipelineSpec extends SparkTestBase {
     val (catalog, _, _, _) = freshPipeline()
     catalog.ensureTable("db", "keyed")
     catalog.addColumns("db", "keyed", Map("lang" -> "string", "n" -> "int"))
-    catalog.setPartitioning("db", "keyed", Seq("lang"))
     import spark.implicits._
     def batch = Seq(("en", 1L), ("de", 2L), ("en", 3L)).toDF("lang", "n")
       .withColumn("__row_id", col("n"))
@@ -291,9 +242,6 @@ class IngestPipelineSpec extends SparkTestBase {
     catalog.append("db", "keyed", batch, jobKey = Some("q8")) // a new job
     assert(catalog.read("db", "keyed").count() == 6L,
       "distinct keys append independently")
-    // hive layout survives the staged publish; pruning still works
-    val files = catalog.read("db", "keyed").inputFiles
-    assert(files.forall(_.contains("lang=")), s"hive layout: ${files.mkString(",")}")
     val en = catalog.read("db", "keyed").filter(col("lang") === "en")
     assert(en.collect().map(_.getAs[Long]("n")).sum == 8L)
   }
@@ -304,62 +252,5 @@ class IngestPipelineSpec extends SparkTestBase {
     assert(!ingest.insert("db", "t", """"just a string"""").fullySucceeded)
     val partial = ingest.insert("db", "t", """[{"ok": 1}, {"ok": 2}]""")
     assert(partial.inserted == 2 && partial.failed == 0)
-  }
-
-  test("clustered rewrite: selective scans skip row groups; compact preserves the order") {
-    import org.apache.spark.sql.functions.{col, md5, concat, lit}
-    import org.apache.spark.sql.DataFrame
-    val (catalog, _, _, _) = freshPipeline()
-    catalog.ensureTable("db", "clus")
-    catalog.addColumns("db", "clus", Map("k" -> "int", "v" -> "string"))
-    import spark.implicits._
-    // ingest order is a deterministic shuffle of the key — every file
-    // spans the whole key range, so min/max stats prune nothing
-    val rows = (0L until 40000L).map(i => (i, ""))
-      .toDF("k", "v0")
-      // incompressible payload so targetFileBytes actually fans out
-      .withColumn("v", concat(md5(concat(lit("v1"), col("k").cast("string"))),
-        md5(concat(lit("v2"), col("k").cast("string")))))
-      .drop("v0")
-      .orderBy(md5(concat(lit("mix"), col("k").cast("string"))))
-      .withColumn("__row_id", col("k"))
-      .repartition(8)
-    catalog.append("db", "clus", rows)
-
-    def scanRows(df: DataFrame): Long = {
-      df.collect()
-      df.queryExecution.executedPlan.collect {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
-      }.map(_.metrics("numOutputRows").value).sum
-    }
-    val pred = col("k") >= 1000L && col("k") < 1100L
-    val before = scanRows(catalog.read("db", "clus").filter(pred))
-    assert(before > 20000L, s"unclustered scan should touch ~everything, saw $before")
-
-    // cluster on k with small target files → many disjoint key ranges
-    val (_, nFiles) = catalog.cluster("db", "clus", Seq("k"), targetFileBytes = 256L << 10)
-    assert(nFiles >= 4, s"expected several clustered files, got $nFiles")
-    val q = catalog.read("db", "clus").filter(pred)
-    val after = scanRows(q)
-    assert(q.collect().length == 100)
-    assert(after < before / 3,
-      s"row-group skipping should cut the scan: $before -> $after")
-    assert(catalog.clusteringOf("db", "clus") == Seq("k"), "clustering persisted")
-
-    // compact() must keep the declared sort order (same small target
-    // so multiple files survive) — pruning still works afterwards
-    catalog.append("db", "clus",
-      Seq((50000L, "late")).toDF("k", "v").withColumn("__row_id", col("k")))
-    catalog.compact("db", "clus", targetFileBytes = 256L << 10)
-    val q2 = catalog.read("db", "clus").filter(pred)
-    val afterCompact = scanRows(q2)
-    assert(q2.collect().length == 100)
-    assert(afterCompact < before / 3,
-      s"compaction destroyed clustering: $before -> $afterCompact")
-
-    // unknown column rejected
-    intercept[IllegalArgumentException] {
-      catalog.setClustering("db", "clus", Seq("nope"))
-    }
   }
 }

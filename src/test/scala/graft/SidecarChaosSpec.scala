@@ -68,17 +68,19 @@ class SidecarChaosSpec extends SparkTestBase {
     val cat = newCatalog()
     cat.ensureTable("db", "t")
     cat.addColumns("db", "t", Map("k" -> "int", "v" -> "string"))
-    // clustering rewrites the SAME small file on every call — the
-    // hottest torn-read shape (the r14 failure hit partition/dedup
-    // sidecars through this same writeString path)
+    // the dedup policy rewrites the SAME small file on every call — the
+    // hottest torn-read shape (the r14 failure hit the dedup sidecar
+    // through this same writeString path); the table has no index, so
+    // nothing pins the policy's params
+    def policy(mode: String) = GraftCatalog.DedupPolicy(textCol = "v", mode = mode)
     val flip = new AtomicInteger(0)
     hammer(2000, 4) { () =>
-      cat.setClustering("db", "t",
-        if (flip.incrementAndGet() % 2 == 0) Seq("k") else Seq("k", "v"))
+      cat.setDedupPolicy("db", "t",
+        policy(if (flip.incrementAndGet() % 2 == 0) "tag" else "drop"))
     } { () =>
-      val cl = cat.clusteringOf("db", "t")
-      assert(cl == Seq("k") || cl == Seq("k", "v") || cl.isEmpty,
-        s"torn clustering sidecar: $cl")
+      val p = cat.dedupPolicyOf("db", "t")
+      assert(p.isEmpty || p.contains(policy("tag")) || p.contains(policy("drop")),
+        s"torn dedup sidecar: $p")
     }
     // the rename commit must not leak temp files into the table dir
     import org.apache.hadoop.fs.{Path => HPath}
