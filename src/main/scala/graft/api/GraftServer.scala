@@ -7,7 +7,6 @@ import graft.functions.JValue._
 import graft.query.{Copier, QueryService}
 import graft.sources._
 import org.apache.spark.sql.{AnalysisException, SparkSession}
-import java.io.OutputStreamWriter
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
@@ -467,13 +466,13 @@ final class GraftServer(spark: SparkSession, root: String, workerCount: Int = 2,
     }
     ex.getResponseHeaders.set("Content-Type", contentType)
     ex.sendResponseHeaders(200, 0) // chunked: stream rows as they come
-    val w = new OutputStreamWriter(ex.getResponseBody, StandardCharsets.UTF_8)
-    format.toLowerCase match {
-      case "csv"    => QueryService.writeCsv(df, w)
-      case "ndjson" => QueryService.writeNdjson(df, w)
-      case _        => QueryService.writeJson(df, w)
+    val out = ex.getResponseBody
+    val bytes = format.toLowerCase match {
+      case "csv"    => QueryService.writeCsv(df, out)
+      case "ndjson" => QueryService.writeNdjson(df, out)
+      case _        => QueryService.writeJson(df, out)
     }
-    w.flush()
+    metrics.returned(Metrics.routeOf(ex.getRequestURI.getPath), bytes)
   }
 
   private def handleCopy(ex: HttpExchange, db: String, isAdmin: Boolean): Unit = {

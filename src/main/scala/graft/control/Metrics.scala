@@ -6,35 +6,43 @@ import java.util.concurrent.atomic.{DoubleAdder, LongAdder}
 /** Prometheus-style request metrics (the reference wires promhttp and
   * wraps its query/insert handlers in duration histograms —
   * /root/reference/pkg/api/router.go:37, pkg/api/data.go:20-30).
-  * Counters per (route, code) plus a cumulative-bucket duration
-  * histogram per route, rendered in the text exposition format. Route
+  * Counters per (route, code), a cumulative-bucket duration histogram
+  * per route, and the reference's `bytes_returned` histogram
+  * (pkg/api/router.go:24-28, 1 KB–100 MB) of the encoded result bytes
+  * per query route, rendered in the text exposition format. Route
   * labels are normalized path classes, so cardinality stays bounded no
   * matter what paths clients probe. */
 final class Metrics {
-  private val buckets =
+  private val secondsBuckets =
     Array(0.005, 0.01, 0.025, 0.05, 0.1, 0.25, 0.5, 1.0, 2.5, 5.0, 10.0, 30.0)
+  private val bytesBuckets = Array(1e3, 1e4, 1e5, 1e6, 1e7, 1e8)
 
-  private final class Histo {
+  private final class Histo(buckets: Array[Double]) {
     val bucketCounts = Array.fill(buckets.length)(new LongAdder)
     val sum = new DoubleAdder
     val count = new LongAdder
-    def observe(seconds: Double): Unit = {
+    def observe(value: Double): Unit = {
       var i = 0
       while (i < buckets.length) {
-        if (seconds <= buckets(i)) bucketCounts(i).increment()
+        if (value <= buckets(i)) bucketCounts(i).increment()
         i += 1
       }
-      sum.add(seconds); count.increment()
+      sum.add(value); count.increment()
     }
   }
 
   private val requests = new ConcurrentHashMap[(String, Int), LongAdder]()
   private val durations = new ConcurrentHashMap[String, Histo]()
+  private val bytesReturned = new ConcurrentHashMap[String, Histo]()
 
   def record(route: String, code: Int, seconds: Double): Unit = {
     requests.computeIfAbsent((route, code), _ => new LongAdder).increment()
-    durations.computeIfAbsent(route, _ => new Histo).observe(seconds)
+    durations.computeIfAbsent(route, _ => new Histo(secondsBuckets)).observe(seconds)
   }
+
+  /** The encoded bytes one query answer streamed to its client. */
+  def returned(route: String, bytes: Long): Unit =
+    bytesReturned.computeIfAbsent(route, _ => new Histo(bytesBuckets)).observe(bytes.toDouble)
 
   /** Prometheus text exposition format (version 0.0.4). */
   def render(): String = {
@@ -47,24 +55,32 @@ final class Metrics {
         sb.append(s"""graft_requests_total{route="$route",code="$code"} ${e.getValue.sum()}""")
         sb.append('\n')
       }
-    sb.append("# HELP graft_request_duration_seconds HTTP request latency by route\n")
-    sb.append("# TYPE graft_request_duration_seconds histogram\n")
-    durations.entrySet().stream().sorted((a, b) => a.getKey.compareTo(b.getKey))
+    histogram(sb, "graft_request_duration_seconds", "HTTP request latency by route",
+      secondsBuckets, durations)
+    histogram(sb, "graft_bytes_returned", "Encoded query result bytes by route",
+      bytesBuckets, bytesReturned)
+    sb.toString
+  }
+
+  private def histogram(sb: StringBuilder, name: String, help: String,
+                        buckets: Array[Double], byRoute: ConcurrentHashMap[String, Histo]): Unit = {
+    sb.append(s"# HELP $name $help\n")
+    sb.append(s"# TYPE $name histogram\n")
+    byRoute.entrySet().stream().sorted((a, b) => a.getKey.compareTo(b.getKey))
       .forEach { e =>
         val route = e.getKey
         val h = e.getValue
         buckets.indices.foreach { i =>
-          sb.append(s"""graft_request_duration_seconds_bucket{route="$route",le="${buckets(i)}"} ${h.bucketCounts(i).sum()}""")
+          sb.append(s"""${name}_bucket{route="$route",le="${buckets(i)}"} ${h.bucketCounts(i).sum()}""")
           sb.append('\n')
         }
-        sb.append(s"""graft_request_duration_seconds_bucket{route="$route",le="+Inf"} ${h.count.sum()}""")
+        sb.append(s"""${name}_bucket{route="$route",le="+Inf"} ${h.count.sum()}""")
         sb.append('\n')
-        sb.append(s"""graft_request_duration_seconds_sum{route="$route"} ${h.sum.sum()}""")
+        sb.append(s"""${name}_sum{route="$route"} ${h.sum.sum()}""")
         sb.append('\n')
-        sb.append(s"""graft_request_duration_seconds_count{route="$route"} ${h.count.sum()}""")
+        sb.append(s"""${name}_count{route="$route"} ${h.count.sum()}""")
         sb.append('\n')
       }
-    sb.toString
   }
 }
 

@@ -1,25 +1,29 @@
 package graft.query
 
 import graft.functions.GraftExtensions
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
 import org.apache.spark.sql.catalyst.plans.logical.{Command, InsertIntoDir, InsertIntoStatement}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import java.io.Writer
+import org.apache.spark.sql.graft.ResultBytes
+import java.io.{OutputStream, Writer}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Paths
 
 /** Query passthrough + streaming result encoders (SURVEY §2A A9-A11,
   * A14). The reference trims the SQL (whitespace + trailing ';',
   * /root/reference/pkg/util/sql.go:9-13), hands it verbatim to the
   * backend, and streams the encoded result without ever materializing
-  * it. Spark analog: `spark.sql` → rows encoded to strings on the
-  * executors → one Spark job per wave of result partitions, written to
-  * the client in partition order. At most one wave is buffered on the
-  * driver, and a wave is sized to a budget under
-  * `spark.driver.maxResultSize` (see `streamLines`); `toLocalIterator`
-  * would buffer one partition but run one job per partition.
+  * it. Spark analog: `spark.sql` → the query's own plan runs, and each
+  * task encodes its partition's rows as one chunk of UTF-8 bytes
+  * ([[ResultBytes]]) → one Spark job per wave of result partitions,
+  * the chunks written to the client in partition order as they are.
+  * At most one wave is buffered on the driver, and a wave is sized to a
+  * budget under `spark.driver.maxResultSize` (see `streamChunks`);
+  * `toLocalIterator` would buffer one partition but run one job per
+  * partition.
   *
   * A query whose whole input is small runs as one Spark job, as it
   * would inside the reference's single-process DuckDB: `query` and
@@ -132,51 +136,76 @@ object QueryService {
   }
 
   /** Single JSON array, rows comma-spliced as they stream
-    * (duckdb/query.go:15-116 / clickhouse/query.go:24-70). */
-  def writeJson(df: DataFrame, out: Writer): Unit = {
-    out.write("[")
-    var first = true
-    streamLines(df.toJSON, waveBudget(df.sparkSession)) { line =>
-      if (!first) out.write(",")
-      out.write(line)
-      first = false
-    }
-    out.write("]")
-  }
+    * (duckdb/query.go:15-116 / clickhouse/query.go:24-70). Each writer
+    * returns the bytes it wrote. */
+  def writeJson(df: DataFrame, out: OutputStream): Long = json(df, Out(out))
+  def writeJson(df: DataFrame, out: Writer): Long = json(df, Out(out))
 
   /** One JSON object per line (FORMAT JSONEachRow analog). */
-  def writeNdjson(df: DataFrame, out: Writer): Unit =
-    streamLines(df.toJSON, waveBudget(df.sparkSession)) { line =>
-      out.write(line); out.write("\n")
-    }
+  def writeNdjson(df: DataFrame, out: OutputStream): Long = ndjson(df, Out(out))
+  def writeNdjson(df: DataFrame, out: Writer): Long = ndjson(df, Out(out))
 
   /** CSV with header row; NULL renders as the literal `null`
     * (postgres/query.go:139-197 writes %v-stringified values and
     * `null` at :176). Quotes only when the value needs escaping. */
-  def writeCsv(df: DataFrame, out: Writer): Unit = {
-    out.write(df.columns.map(csvCell).mkString(","))
-    out.write("\n")
-    streamLines(df.map(csvLine)(Encoders.STRING), waveBudget(df.sparkSession)) { line =>
-      out.write(line); out.write("\n")
+  def writeCsv(df: DataFrame, out: OutputStream): Long = csv(df, Out(out))
+  def writeCsv(df: DataFrame, out: Writer): Long = csv(df, Out(out))
+
+  private def json(df: DataFrame, out: Out): Long = {
+    out.text("[")
+    var first = true
+    streamChunks(df, ResultBytes.json(df, sep = ",", end = ""), waveBudget(df.sparkSession)) { c =>
+      if (!first) out.text(",")
+      out.chunk(c)
+      first = false
     }
+    out.text("]")
+    out.written
   }
 
-  /** Hands each string of `lines` to `emit` in partition order, one
-    * Spark job per wave of partitions. A wave's strings must fit
-    * `budget` chars on the driver: each task returns its partition only
-    * while the partition stays under its share of the budget, and a
-    * partition that passes its share is fetched again in a job of its
-    * own, as `toLocalIterator` would fetch it. Each next wave is sized
-    * from the largest partition seen so far, so a small result takes one
-    * job per `defaultParallelism` partitions and a large export drops
-    * back to one partition per job. */
-  private[graft] def streamLines(lines: Dataset[String], budget: Long)(emit: String => Unit): Unit = {
-    val qe = lines.queryExecution
-    SQLExecution.withNewExecutionId(qe, Some("streamLines")) {
+  private def ndjson(df: DataFrame, out: Out): Long = {
+    streamChunks(df, ResultBytes.json(df, sep = "", end = "\n"), waveBudget(df.sparkSession))(out.chunk)
+    out.written
+  }
+
+  private def csv(df: DataFrame, out: Out): Long = {
+    out.text(df.columns.map(csvCell).mkString(","))
+    out.text("\n")
+    streamChunks(df, ResultBytes.lines(df, csvLine, "\n"), waveBudget(df.sparkSession))(out.chunk)
+    out.written
+  }
+
+  /** Where encoded output goes, with its count of UTF-8 bytes. Text is
+    * the prelude and the glue between chunks, each one write. */
+  private final class Out(writeText: String => Unit, writeChunk: Array[Byte] => Unit) {
+    var written = 0L
+    def text(s: String): Unit = { writeText(s); written += s.getBytes(UTF_8).length }
+    def chunk(c: Array[Byte]): Unit = { writeChunk(c); written += c.length }
+  }
+
+  private object Out {
+    def apply(out: OutputStream): Out = new Out(s => out.write(s.getBytes(UTF_8)), out.write(_))
+    /** A chunk ends on a row boundary, so decoding it whole is exact. */
+    def apply(out: Writer): Out = new Out(out.write(_), c => out.write(new String(c, UTF_8)))
+  }
+
+  /** Hands the encoded chunks of `df`'s non-empty result partitions to
+    * `emit` in partition order, running `df`'s own plan, one Spark job
+    * per wave of partitions. A wave's chunks must fit `budget` bytes on
+    * the driver: each task returns its chunk only while the chunk stays
+    * under its share of the budget, and a partition that passes its
+    * share is fetched again in a job of its own, as `toLocalIterator`
+    * would fetch it. Each next wave is sized from the largest chunk seen
+    * so far, so a small result takes one job per `defaultParallelism`
+    * partitions and a large export drops back to one partition per job. */
+  private[graft] def streamChunks(df: DataFrame, encode: ResultBytes.Encoder, budget: Long)
+                                 (emit: Array[Byte] => Unit): Unit = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("streamChunks")) {
       val rdd = qe.toRdd
       val sc = rdd.sparkContext
-      def fetch(ids: Seq[Int], cap: Long): Array[Option[Array[String]]] =
-        sc.runJob(rdd, (it: Iterator[InternalRow]) => linesUpTo(it, cap), ids)
+      def fetch(ids: Seq[Int], cap: Long): Array[Option[Array[Byte]]] =
+        sc.runJob(rdd, (it: Iterator[InternalRow]) => encode(it, cap), ids)
       val most = math.max(1, sc.defaultParallelism)
       val n = rdd.getNumPartitions
       var wave = most
@@ -189,8 +218,8 @@ object QueryService {
         while (i < parts.length) {
           val part = parts(i).getOrElse(fetch(Seq(ids(i)), Long.MaxValue).head.get)
           parts(i) = None
-          part.foreach(emit)
-          largest = math.max(largest, part.iterator.map(_.length.toLong).sum)
+          if (part.nonEmpty) emit(part)
+          largest = math.max(largest, part.length.toLong)
           i += 1
         }
         start = ids.end
@@ -199,9 +228,9 @@ object QueryService {
     }
   }
 
-  /** Chars of encoded rows one wave may bring to the driver: a quarter
-    * of `spark.driver.maxResultSize` (room for serialization overhead
-    * and multi-byte chars, so a wave never trips the job-abort check),
+  /** Bytes of encoded rows one wave may bring to the driver: a quarter
+    * of `spark.driver.maxResultSize` (room for the task results'
+    * serialization overhead, so a wave never trips the job-abort check),
     * and at most an eighth of the driver heap. */
   private def waveBudget(spark: SparkSession): Long = {
     val maxResult = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
@@ -210,20 +239,7 @@ object QueryService {
     if (maxResult <= 0) heap else math.min(maxResult / 4, heap)
   }
 
-  /** A partition's strings, or None once their length passes `cap`. */
-  private def linesUpTo(it: Iterator[InternalRow], cap: Long): Option[Array[String]] = {
-    val out = Array.newBuilder[String]
-    var chars = 0L
-    while (it.hasNext) {
-      val line = it.next().getUTF8String(0).toString
-      chars += line.length
-      if (chars > cap) return None
-      out += line
-    }
-    Some(out.result())
-  }
-
-  private def csvLine(row: Row): String = {
+  private[graft] def csvLine(row: Row): String = {
     val sb = new StringBuilder
     var i = 0
     while (i < row.length) {

@@ -1,5 +1,6 @@
 package graft.query
 
+import graft.util.GraftConf
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.planning.ExtractEquiJoinKeys
 import org.apache.spark.sql.catalyst.plans.FullOuter
@@ -63,7 +64,7 @@ object SmallQueries {
   private def hashSmallSides(j: Join): JoinHint = {
     val limit = SQLConf.get.autoBroadcastJoinThreshold
     def hint(side: LogicalPlan) =
-      if (side.stats.sizeInBytes <= limit) Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
+      if (GraftConf.fitsIn(side, limit)) Some(HintInfo(strategy = Some(SHUFFLE_HASH)))
       else None
     JoinHint(hint(j.left), hint(j.right))
   }

@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one reader of graft's own `graft.*` session settings, and the
   * one size test behind every size-adaptive arm.
@@ -43,7 +44,11 @@ object GraftConf {
     * so an unmeasured input takes the big arm, the one that holds at
     * any scale. */
   def fitsIn(df: DataFrame, limitBytes: Long): Boolean =
-    df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(limitBytes)
+    fitsIn(df.queryExecution.optimizedPlan, limitBytes)
+
+  /** [[fitsIn]] for a plan the optimizer is still working on. */
+  def fitsIn(plan: LogicalPlan, limitBytes: Long): Boolean =
+    plan.stats.sizeInBytes <= BigInt(limitBytes)
 
   private def read[T](ss: SparkSession, key: String, default: T, expected: String)
                      (parse: String => T): T =

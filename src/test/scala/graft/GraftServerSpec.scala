@@ -3,6 +3,7 @@ package graft
 import graft.api.GraftServer
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
 /** Full-stack HTTP tests: the reference's own quickstart flow
@@ -715,6 +716,29 @@ class GraftServerSpec extends SparkTestBase {
       val m = get(s"$base/metrics").body()
       assert(m.contains("""graft_requests_total{route="query",code="200"}"""), m)
       assert(m.contains("""graft_request_duration_seconds_bucket{route="dashboard",le="+Inf"} 1"""), m)
+    } finally srv.stop()
+  }
+
+  test("/metrics: bytes_returned holds each streamed answer's encoded bytes") {
+    val (srv, base) = newServer()
+    try {
+      val q = post(s"$base/api/data/query?api_key=localkey",
+        "select id, concat('é,\"', id) as s from range(0, 50, 1, 3)")
+      assert(q.statusCode() == 200)
+      val sh = post(s"$base/api/data/query/share?api_key=localkey",
+        """{"query": "select 'ü' as u", "duration": 3600, "name": "b"}""")
+      val shared = get(s"$base/share/${sh.body().split("\"")(3)}/data.csv")
+      assert(shared.body() == "u\nü\n", shared.body())
+      val m = get(s"$base/metrics").body()
+      def series(name: String, route: String): Double =
+        m.linesIterator.collectFirst {
+          case l if l.startsWith(s"""graft_bytes_returned_$name{route="$route"} """) =>
+            l.split(" ").last.toDouble
+        }.getOrElse(fail(s"no $name for $route in\n$m"))
+      assert(series("count", "query") == 1)
+      assert(series("sum", "query") == q.body().getBytes(UTF_8).length)
+      assert(series("count", "share_data") == 1)
+      assert(series("sum", "share_data") == shared.body().getBytes(UTF_8).length)
     } finally srv.stop()
   }
 

@@ -5,8 +5,13 @@ import graft.query.QueryService
 import graft.sources.{GraftCatalog, Loader}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, QueryExecution, SerializeFromObjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import java.io.{File, StringWriter}
+import org.apache.spark.sql.graft.ResultBytes
+import org.apache.spark.sql.util.QueryExecutionListener
+import java.io.{ByteArrayOutputStream, File, OutputStream, StringWriter, Writer}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
@@ -16,7 +21,7 @@ import java.nio.file.{Files, Paths}
   * footers instead of re-reading its input. The inventory's SQL path
   * (`Tables.sql`) rebuilds the view of every table its text names, so a
   * view left from another scale factor never answers for it. */
-class QueryPathSpec extends SparkTestBase {
+class QueryPathSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   /** A catalog on its own child session (temp views are per session),
     * and a loader that writes `rows` as one NDJSON file and loads it. */
@@ -109,11 +114,13 @@ class QueryPathSpec extends SparkTestBase {
     val rows = df.collect()
     val json = df.toJSON.collect()
     val waves = math.ceil(10.0 / spark.sparkContext.defaultParallelism).toInt
-    def encode(f: (org.apache.spark.sql.DataFrame, StringWriter) => Unit) = {
-      val w = new StringWriter()
-      val jobs = jobsIn(f(df, w))
+    def encode(f: (org.apache.spark.sql.DataFrame, OutputStream) => Long) = {
+      val out = new ByteArrayOutputStream()
+      var written = -1L
+      val jobs = jobsIn { written = f(df, out) }
       assert(jobs == waves, s"expected $waves jobs (one per wave), ran $jobs")
-      w.toString
+      assert(written == out.size)
+      out.toString(UTF_8)
     }
     assert(encode(QueryService.writeJson) == json.mkString("[", ",", "]"))
     assert(encode(QueryService.writeNdjson) == json.map(_ + "\n").mkString)
@@ -125,17 +132,127 @@ class QueryPathSpec extends SparkTestBase {
   }
 
   test("a result larger than the wave budget streams in order in smaller waves") {
-    val lines = spark.range(0, 300, 1, 10).toJSON
-    val expected = lines.collect()
-    // 30 JSON lines per partition: 350-390 chars each, 3,780 in all
+    val df = spark.range(0, 300, 1, 10).toDF()
+    val expected = df.toJSON.collect()
+    // 30 NDJSON lines per partition: 290-330 bytes each, 3,190 in all
     val budget = 900L
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val jobs = jobsIn(QueryService.streamLines(lines, budget)(out += _))
+    val jobs = jobsIn(QueryService.streamChunks(df, ResultBytes.json(df, "", "\n"), budget) { c =>
+      out ++= new String(c, UTF_8).split("\n")
+    })
     assert(out.toSeq == expected.toSeq)
-    // the first wave (4 partitions at local[4]) passes its 225-char
-    // shares, so each of its partitions is fetched alone; the 380-char
+    // the first wave (4 partitions at local[4]) passes its 225-byte
+    // shares, so each of its partitions is fetched alone; the 320-byte
     // largest then sizes the rest into waves of 2: 1 + 4 + 3 jobs
     assert(jobs == 8, s"expected 8 jobs, ran $jobs")
+  }
+
+  /** Each column a JSON or CSV encoder treats apart: multi-byte and
+    * 4-byte UTF-8 with quotes, commas and newlines, nulls, nested
+    * struct/array/map, decimal, binary, NaN and ±Infinity, date,
+    * timestamp and timestamp_ntz. 8 partitions of one row; the filter
+    * keeps partitions 0, 3 and 6, so empty partitions sit between
+    * non-empty ones. */
+  private def wide(s: SparkSession) = s.range(0, 8, 1, 8).where("id % 3 = 0").selectExpr(
+    "id",
+    "case id when 0 then 'ünï \"q\", ✓\nnext' when 3 then '日本語,😀\r' end AS s",
+    "if(id = 3, null, id) AS n",
+    "named_struct('a', id, 'b', concat('x\"', id), 'c', array(id, null)) AS st",
+    "array('a,b', null, 'ç') AS arr",
+    "map('k\"1', id * 1.5D, 'k2', null) AS m",
+    "cast(id * 1.25 - 3 AS decimal(10, 3)) AS dec",
+    "cast(concat('b', id) AS binary) AS bin",
+    "case id when 0 then double('NaN') when 3 then double('Infinity') else double('-Infinity') end AS dbl",
+    "date_add(date'2024-02-28', cast(id AS int)) AS d",
+    "timestamp'2024-03-10 01:30:00' + make_interval(0, 0, 0, 0, cast(id AS int), 7, 0.125) AS ts",
+    "timestamp_ntz'2024-01-01 00:00:00' + make_interval(0, 0, 0, cast(id AS int), 0, 0, 0) AS ntz")
+
+  /** Parent's text for each format: `toJSON` lines spliced as the
+    * encoders splice them, and the Row-based `csvLine` over `collect`. */
+  private def parentText(df: org.apache.spark.sql.DataFrame): Map[String, String] = {
+    val json = df.toJSON.collect()
+    Map(
+      "json" -> json.mkString("[", ",", "]"),
+      "ndjson" -> json.map(_ + "\n").mkString,
+      "csv" -> (df.columns.mkString("", ",", "\n") +
+        df.collect().map(r => QueryService.csvLine(r) + "\n").mkString))
+  }
+
+  /** Each format's bytes through the OutputStream writer; the Writer
+    * overload must decode to the same text. */
+  private def encoded(df: org.apache.spark.sql.DataFrame): Map[String, Array[Byte]] = {
+    def run(toStream: (org.apache.spark.sql.DataFrame, OutputStream) => Long,
+            toWriter: (org.apache.spark.sql.DataFrame, Writer) => Long): Array[Byte] = {
+      val out = new ByteArrayOutputStream()
+      assert(toStream(df, out) == out.size)
+      val w = new StringWriter()
+      assert(toWriter(df, w) == out.size)
+      assert(w.toString == out.toString(UTF_8))
+      out.toByteArray
+    }
+    Map(
+      "json" -> run(QueryService.writeJson, QueryService.writeJson),
+      "ndjson" -> run(QueryService.writeNdjson, QueryService.writeNdjson),
+      "csv" -> run(QueryService.writeCsv, QueryService.writeCsv))
+  }
+
+  private def assertSameBytes(df: org.apache.spark.sql.DataFrame, formats: String*): Unit = {
+    val want = parentText(df)
+    val got = encoded(df)
+    formats.foreach { f =>
+      assert(java.util.Arrays.equals(got(f), want(f).getBytes(UTF_8)),
+        s"$f differs:\n${new String(got(f), UTF_8)}\nvs parent\n${want(f)}")
+    }
+  }
+
+  test("the byte encoders write the parent's text on a wide schema under a non-UTC zone") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    val df = wide(s)
+    assert(df.rdd.getNumPartitions == 8)
+    assert(df.count() == 3)
+    assertSameBytes(df, "json", "ndjson", "csv")
+    val json = new String(encoded(df)("json"), UTF_8)
+    assert(json.contains("-07:00") && json.contains("-08:00"), json) // zone and its DST shift
+    val empty = df.where("false")
+    assertSameBytes(empty, "json", "ndjson", "csv")
+    assert(new String(encoded(empty)("json"), UTF_8) == "[]")
+  }
+
+  test("the CSV encoder builds its Row deserializer from the DataFrame's session") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    s.conf.set("spark.sql.datetime.java8API.enabled", "true")
+    val df = wide(s)
+    val ts = df.collect().head.getAs[Any]("ts")
+    assert(ts.isInstanceOf[java.time.Instant], ts.getClass)
+    assertSameBytes(df, "csv")
+    assert(new String(encoded(df)("csv"), UTF_8).contains(ts.toString))
+  }
+
+  test("the encoders run the plan tenantQuery checked, with no Row round trip") {
+    val s = spark.newSession()
+    val seen = new LinkedBlockingQueue[(String, QueryExecution)]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(f -> qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    val df = QueryService.tenantQuery(s,
+      "select id % 7 as k, count(*) as n from range(0, 1000, 1, 4) group by 1 order by 1",
+      Seq(Files.createTempDirectory("graft-scope").toString))
+    def wrappers(qe: QueryExecution) = collectWithSubqueries(qe.executedPlan) {
+      case p @ (_: DeserializeToObjectExec | _: MapPartitionsExec | _: SerializeFromObjectExec) => p
+    }
+    // the parent's encoder plan: toJSON wraps the query in all three
+    assert(wrappers(df.toJSON.queryExecution).size == 3)
+    Seq[OutputStream => Long](QueryService.writeJson(df, _), QueryService.writeNdjson(df, _),
+        QueryService.writeCsv(df, _)).foreach { write =>
+      write(new ByteArrayOutputStream())
+      val (name, qe) = seen.poll(30, TimeUnit.SECONDS)
+      assert(name == "streamChunks")
+      assert(qe eq df.queryExecution, "the encoder must run the query's own execution")
+      assert(wrappers(qe).isEmpty, qe.executedPlan.treeString)
+    }
   }
 
   test("every Tables.sql definition plans and scans only its own directory") {
